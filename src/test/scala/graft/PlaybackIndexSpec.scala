@@ -54,7 +54,12 @@ class PlaybackIndexSpec extends SparkSpec {
     "x\n\n\ny\n",              // empty lines
     "single line no newline",
     "\nleading empty line\n",
-    (1 to 50).map(i => s"row$i,val$i").mkString("\n") + "\n")
+    (1 to 50).map(i => s"row$i,val$i").mkString("\n") + "\n",
+    "a,b\r\n1,2\r\n3,4\r\n",     // CRLF
+    "a,b\r\n1,2\r\n3,4",         // CRLF, no trailing newline
+    "a\rb,1\n2,3\n",             // a lone '\r' is not a line end
+    "ts,note\n1,é\n2,Grüße\n3,測定値\n4,😀\n", // multibyte UTF-8
+    "ts,note\n1,測定値")
 
   test("range-scan line index matches a naive scan at every range size") {
     for (content <- contents; range <- Seq(1L, 2L, 3L, 5L, 7L, 16L, 1024L))
@@ -78,6 +83,20 @@ class PlaybackIndexSpec extends SparkSpec {
     }
   }
 
+  test("nextSampleLine is the next line that seeks with no skip, at every range size") {
+    val big = (0 until 40000).map(i => s"r$i").mkString("\n") + "\n"
+    val cases = contents.map(_ -> Seq(1L, 7L, 1024L)) :+ (big -> Seq(16 * 1024L, 64 * 1024L))
+    for ((content, ranges) <- cases; range <- ranges) {
+      val idx = CsvPlaybackStream.buildLineIndex(spark.sparkContext, write(content), range)
+      val zeroSkip = (0L until idx.totalLines).filter(l => idx.offsetFor(l).exists(_._2 == 0L))
+      val expected = (0L until idx.totalLines).map { line =>
+        zeroSkip.find(_ > line).getOrElse(idx.totalLines)
+      }
+      val got = (0L until idx.totalLines).map(l => idx.nextSampleLine(l).get)
+      assert(got == expected, s"range=$range lines=${idx.totalLines}")
+    }
+  }
+
   test("empty file still raises EOF (S6 guard)") {
     val path = write("")
     intercept[java.io.EOFException] {
@@ -91,5 +110,23 @@ class PlaybackIndexSpec extends SparkSpec {
     assert(idx.totalLines == 4, "header + 3 data lines")
     assert(idx.splits.isEmpty, "compressed: readers line-skip from 0")
     assert(idx.offsetFor(0L).isEmpty)
+    assert(idx.compressed && idx.nextSampleLine(0L).isEmpty)
+  }
+
+  test("gz line count matches the naive scan, with and without a trailing newline") {
+    def gz(content: String): String = {
+      val f = Files.createTempFile("lineindex", ".csv.gz")
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(f))
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+      f.toString
+    }
+    // ~2.6 MB of lines spans several of the scan's 1 MB blocks
+    val long = (0 until 200000).map(i => s"$i,v$i").mkString("\n")
+    for (content <- contents ++ Seq(long, long + "\n", "\n", "\n\n")) {
+      val idx = CsvPlaybackStream.buildLineIndex(spark.sparkContext, gz(content), 4L)
+      val naive = naiveLineStarts(content.getBytes("UTF-8")).length
+      assert(idx.totalLines == naive, s"gz ${content.take(20).replace("\n", "\\n")}")
+      assert(idx.compressed && idx.splits.isEmpty)
+    }
   }
 }
