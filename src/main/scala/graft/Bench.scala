@@ -319,7 +319,7 @@ object Bench {
         val lm = queryContention.get(k).map(_.loadMean).getOrElse(-1.0)
         f"""{"query":"$k","prev_sec":${prior(k)}%.3f,"sec":${r.sec}%.3f,"ratio":${r.sec / prior(k)}%.2f,"probe_factor":$pf%.2f,"loadavg_mean":$lm%.2f}"""
     }.mkString("[", ",", "]")
-    val priorJson = priorName.map("\"" + _ + "\"").getOrElse("null")
+    val priorJson = priorName.map(Json.str).getOrElse("null")
     // in-band scaling contract (r16): the knobs the harness actually
     // honored, so the driver can confirm $SPARK_GRAFT_CPUS /
     // $SPARK_GRAFT_SF_DIR reached the session without reading the code
@@ -327,8 +327,11 @@ object Bench {
     // the same env var; flat low/high-core ratios at sf0.1 are fixed-
     // cost saturation, not an ignored knob — evidence/scaling_r16.json
     // shows the same binary separating 8 vs 32 cores at sf1)
+    // cpus is a number when SPARK_GRAFT_CPUS holds one, else a string
+    // (`*` is a valid local[*] master); every string goes through
+    // Json.str so the line parses whatever the env holds
     val envJson = if (cpus.isEmpty) ""
-      else s""""cpus":$cpus,"master":"$master","sf_dir":"$sfDir","""
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson"queries":$qs,"warmup_queries":$wq,"memoized":$memo,"failed":$failed,"bench_failures":$nFailed,"playback_rps":$playbackRps%.0f,"playback_rps_agg8":$playbackAgg8%.0f,"host_probe_sec":$probeJson,"host_noise_factor":$noise%.2f,"host_sentinel":$sentJson,"host_scaling_ratio":$worstScaling%.2f,"phase_contention":$phaseJson,"query_contention":$qcJson,"regressions":$regressions,"prior_bench":$priorJson,"playback_stop_interrupts":$stopInterrupts,"task_failed":$taskFailed,"task_killed":$taskKilled,"sf":"$sfDir"}"""
+      else s""""cpus":${cpus.toIntOption.fold(Json.str(cpus))(_.toString)},"master":${Json.str(master)},"sf_dir":${Json.str(sfDir)},"""
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson"queries":$qs,"warmup_queries":$wq,"memoized":$memo,"failed":$failed,"bench_failures":$nFailed,"playback_rps":$playbackRps%.0f,"playback_rps_agg8":$playbackAgg8%.0f,"host_probe_sec":$probeJson,"host_noise_factor":$noise%.2f,"host_sentinel":$sentJson,"host_scaling_ratio":$worstScaling%.2f,"phase_contention":$phaseJson,"query_contention":$qcJson,"regressions":$regressions,"prior_bench":$priorJson,"playback_stop_interrupts":$stopInterrupts,"task_failed":$taskFailed,"task_killed":$taskKilled,"sf":${Json.str(sfDir)}}"""
   }
 }

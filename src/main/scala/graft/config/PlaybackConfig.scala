@@ -218,16 +218,18 @@ object PlaybackConfig {
 
   /** Directory-listing filter (FileFinder, csvplayback.py:503-510):
     * basename contains the pattern and ends with .csv/csv.bz2/csv.gz;
-    * alphabetically first match wins. */
+    * alphabetically first match wins. An idle stream lists at the
+    * trigger's polling rate, so the listing stream is closed here: an
+    * unclosed `Files.list` holds a directory fd until the JVM exits. */
   def matchingFiles(dir: java.nio.file.Path, pattern: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val suffixes = Seq(".csv", "csv.bz2", "csv.gz")
     if (!java.nio.file.Files.isDirectory(dir)) Nil
-    else java.nio.file.Files.list(dir).iterator().asScala
-      .filter { p =>
+    else scala.util.Using.resource(java.nio.file.Files.list(dir)) { s =>
+      s.iterator().asScala.filter { p =>
         val n = p.getFileName.toString
         n.contains(pattern) && suffixes.exists(n.endsWith)
-      }
-      .toSeq.sortBy(_.toString)
+      }.toList
+    }.sortBy(_.toString)
   }
 }

@@ -46,9 +46,23 @@ object CleanCsv {
   def blanksToNull(c: Column): Column =
     when(trim(c.cast("string")) === "", lit(null)).otherwise(c)
 
-  private def orderedW(seriesKeys: Seq[Column]) =
-    if (seriesKeys.isEmpty) Window.orderBy(col(RowIdx))
-    else Window.partitionBy(seriesKeys: _*).orderBy(col(RowIdx))
+  private def orderedW(seriesKeys: Seq[Column], order: Column = col(RowIdx)) =
+    if (seriesKeys.isEmpty) Window.orderBy(order)
+    else Window.partitionBy(seriesKeys: _*).orderBy(order)
+
+  /** The nearest known value at or before each row (`prevVal`/`prevIdx`)
+    * and at or after it (`nextVal`/`nextIdx`). Both are running `last`
+    * frames: the next-value fill runs over the row order reversed, since
+    * Spark re-aggregates an unbounded-FOLLOWING frame for every row
+    * (quadratic in rows) but grows an unbounded-PRECEDING one. */
+  private def neighbours(c: Column, idx: Column, seriesKeys: Seq[Column]) = {
+    val known = when(c.isNotNull, idx)
+    val before = orderedW(seriesKeys).rowsBetween(Window.unboundedPreceding, 0)
+    val after = orderedW(seriesKeys, col(RowIdx).desc)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    (last(c, ignoreNulls = true).over(before), last(known, ignoreNulls = true).over(before),
+      last(c, ignoreNulls = true).over(after), last(known, ignoreNulls = true).over(after))
+  }
 
   /** PD:124-126 — `interpolate(method='linear', limit_direction='both')`:
     * nulls between two known values are linearly interpolated by row
@@ -57,12 +71,7 @@ object CleanCsv {
       seriesKeys: Seq[Column] = Nil): DataFrame = {
     val c = blanksToNull(col(colName)).cast("double")
     val idx = col(RowIdx).cast("double")
-    val before = orderedW(seriesKeys).rowsBetween(Window.unboundedPreceding, 0)
-    val after = orderedW(seriesKeys).rowsBetween(0, Window.unboundedFollowing)
-    val prevVal = last(c, ignoreNulls = true).over(before)
-    val prevIdx = last(when(c.isNotNull, idx), ignoreNulls = true).over(before)
-    val nextVal = first(c, ignoreNulls = true).over(after)
-    val nextIdx = first(when(c.isNotNull, idx), ignoreNulls = true).over(after)
+    val (prevVal, prevIdx, nextVal, nextIdx) = neighbours(c, idx, seriesKeys)
     val filled = when(c.isNotNull, c)
       .when(prevVal.isNull, nextVal) // leading nulls ← limit_direction='both'
       .when(nextVal.isNull, prevVal) // trailing nulls
@@ -77,12 +86,7 @@ object CleanCsv {
       seriesKeys: Seq[Column] = Nil): DataFrame = {
     val c = blanksToNull(col(colName)).cast("double")
     val idx = col(RowIdx).cast("double")
-    val before = orderedW(seriesKeys).rowsBetween(Window.unboundedPreceding, 0)
-    val after = orderedW(seriesKeys).rowsBetween(0, Window.unboundedFollowing)
-    val prevVal = last(c, ignoreNulls = true).over(before)
-    val prevIdx = last(when(c.isNotNull, idx), ignoreNulls = true).over(before)
-    val nextVal = first(c, ignoreNulls = true).over(after)
-    val nextIdx = first(when(c.isNotNull, idx), ignoreNulls = true).over(after)
+    val (prevVal, prevIdx, nextVal, nextIdx) = neighbours(c, idx, seriesKeys)
     val filled = when(c.isNotNull, c)
       .when(prevVal.isNull, nextVal)
       .when(nextVal.isNull, prevVal)

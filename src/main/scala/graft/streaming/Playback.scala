@@ -3,7 +3,7 @@ package graft.streaming
 import graft.config.PlaybackConfig
 import graft.operators.TimestampStyles
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 /** Plugin-lifecycle facade: the reference's entry points
   * (plugin_init / plugin_start / plugin_poll / plugin_reconfigure /
@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   * | TIME_IT throughput prints      | [[ThroughputListener]] (E5)     |
   *
   * The reference's hand-rolled producer/consumer bounded queue
-  * (csvplayback.py:787-930, E4) has no equivalent code here: trigger
-  * pacing + source admission control ARE that backpressure.
+  * (csvplayback.py:787-930, E4) has no equivalent code here: the
+  * source's admission control IS that backpressure.
   */
 object Playback {
 
@@ -36,26 +36,22 @@ object Playback {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         ingest(batch.collect().toSeq)
       }
-      .trigger(pollTrigger(cfg))
       .start()
   }
 
-  /** Emission cadence is governed by the SOURCE's wall-clock admission
-    * (`PlaybackConfig.paceSec`), so the trigger only needs to poll at
-    * least that often — a quarter of the pace keeps the quantization
-    * error small without hot-spinning, and a trigger cycle that
-    * overruns one pace tick no longer aliases the rate to the next
-    * trigger boundary (the source releases the next due chunk at the
-    * first trigger after it falls due). */
-  private def pollTrigger(cfg: PlaybackConfig): Trigger =
-    Trigger.ProcessingTime(math.max(1L, (cfg.paceSec * 1000 / 4).toLong))
-
-  /** Burst/continuous emission into an arbitrary sink format. */
+  /** Burst/continuous emission into an arbitrary sink format.
+    *
+    * Neither entry point sets a trigger. The source's wall-clock
+    * admission (`PlaybackConfig.paceSec`, one chunk per due tick) alone
+    * sets the emission cadence, and Spark's default trigger asks for
+    * the next chunk as soon as a batch commits, waiting only
+    * `spark.sql.streaming.pollingDelay` (10 ms) between empty polls. A
+    * chunk is thus granted within ~10 ms of its tick; a slower poll
+    * grid would only add its own phase to every batch's lag. */
   def startTo(spark: SparkSession, cfg: PlaybackConfig, format: String,
       options: Map[String, String] = Map.empty): StreamingQuery =
     PlaybackStream.readings(spark, cfg.validated)
       .writeStream.format(format).options(options)
-      .trigger(pollTrigger(cfg))
       .start()
 
   /** plugin_reconfigure (csvplayback.py:336-353): stop, swap config,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.config.Enums._
 import graft.config.PlaybackConfig
+import graft.functions.CsvLine
 import graft.schema.UseColumns
 import graft.sources.CsvPlayback
 import graft.timefmt.Strftime
@@ -15,10 +16,13 @@ import org.apache.spark.sql.types._
   * (scan → project/rename/cast → ts rewrite → emit,
   * csvplayback.py:675-784) as one declarative streaming DataFrame.
   *
-  * Parsing happens with `from_csv` (codegen'd) against a schema
-  * resolved once, driver-side, from the file head — mirroring the
-  * reference's single schema resolution at `read_csv_file`
-  * (csvplayback.py:556-673).
+  * Parsing runs against a schema resolved once, driver-side, from the
+  * file head — mirroring the reference's single schema resolution at
+  * `read_csv_file` (csvplayback.py:556-673). A line with no `"` byte
+  * that is well-formed UTF-8 is cut at `,` in one byte pass
+  * ([[graft.functions.CsvLine]]); any other line goes to `from_csv`,
+  * which gives the same fields on the lines the split takes (see
+  * [[parseLine]]).
   */
 object PlaybackStream {
 
@@ -77,13 +81,11 @@ object PlaybackStream {
         val spec = cfg.parsedUseColumns
         val parseNames = names.zipWithIndex.map { case (n, i) => if (n.isEmpty) s"_drop$i" else n }
         val parseSchema = StructType(parseNames.map(StructField(_, StringType)))
-        val opts = Map("escape" -> "\"")
         val inferred: Map[String, DataType] =
           if (names.exists(n => n.nonEmpty && !spec.dtypes.contains(n)))
             inferDtypes(spark, cfg, file, parseNames)
           else Map.empty
-        val withCols = base.withColumn("_parsed",
-          from_csv(col("value"), parseSchema, opts))
+        val withCols = base.withColumn("_parsed", parseLine(col("value"), parseSchema))
         val kept = names.filter(_.nonEmpty).map { n =>
           spec.dtypes.get(n).orElse(inferred.get(n).filter(_ != StringType)) match {
             case Some(dt) => col("_parsed")(n).cast(dt).as(n)
@@ -104,6 +106,14 @@ object PlaybackStream {
 
     applyTimestampStyle(spark, cfg, withMeta, file)
   }
+
+  /** A raw line as the struct of strings `parseSchema` names. Quote-free,
+    * well-formed UTF-8 lines take the one-pass split; the rest (quoted
+    * fields, invalid bytes, which `from_csv` decodes to U+FFFD) take
+    * Univocity. The line's own bytes pick the path. */
+  private[graft] def parseLine(value: Column, parseSchema: StructType): Column =
+    coalesce(CsvLine.split_quote_free(value, parseSchema),
+      from_csv(value, parseSchema, Map("escape" -> "\"")))
 
   /** Streaming twin of the batch `ignoreNaN=report` stage
     * (csvplayback.py:681-691, validated per chunk before the timestamp

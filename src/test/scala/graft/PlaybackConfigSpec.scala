@@ -50,4 +50,21 @@ class PlaybackConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(PlaybackConfig.resolveDataDir("FLEDGE_DATA/sub", "/fr") == "/fr/data/sub")
     assert(PlaybackConfig.resolveDataDir("/abs/dir", "/fr") == "/abs/dir")
   }
+
+  test("matchingFiles closes its directory listing (an idle stream lists at 100 Hz)") {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case u: com.sun.management.UnixOperatingSystemMXBean => u
+      case other => cancel(s"no open-fd count on ${other.getClass.getName}")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("listing")
+    java.nio.file.Files.createFile(dir.resolve("a_vib.csv"))
+    java.nio.file.Files.createFile(dir.resolve("other.txt"))
+    val before = os.getOpenFileDescriptorCount
+    // an unclosed Files.list keeps one fd per call: 2000 calls would
+    // leave ≥ 2000 open, far past the slack for unrelated JVM activity
+    for (_ <- 1 to 2000)
+      assert(PlaybackConfig.matchingFiles(dir, "vib").map(_.getFileName.toString) == Seq("a_vib.csv"))
+    val grown = os.getOpenFileDescriptorCount - before
+    assert(grown < 100, s"open fds grew by $grown over 2000 listings")
+  }
 }

@@ -268,6 +268,23 @@ class PlaybackStreamSpec extends SparkSpec {
     assert(math.abs(r(0).getDouble(1) - 2.5) < 1e-12)
   }
 
+  test("quoted fields take the from_csv path on the stream, quote-free ones the split") {
+    val dir = Files.createTempDirectory("playback")
+    Files.write(dir.resolve("quoted.csv"), Seq(
+      "id,name,value",
+      "1,\"a,b\",10",
+      "2,\"say \"\"hi\"\"\",20",
+      "3,plain,30",
+      "4,,40").mkString("", "\n", "\n").getBytes("UTF-8"))
+    val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = "quoted",
+      postProcessMethod = PostProcess.Rename)
+    runStream(cfg, "quotedq", () => count("quotedq") >= 4)
+    val r = spark.sql("SELECT id, name, value FROM quotedq ORDER BY id").collect()
+      .map(r => (r.get(0).toString, r.getString(1), r.get(2).toString)).toSeq
+    assert(r == Seq(("1", "a,b", "10"), ("2", "say \"hi\"", "20"), ("3", "plain", "30"),
+      ("4", null, "40")))
+  }
+
   test("ragged mode streams the pivoted long form") {
     val dir = stage("ragged.csv")
     val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = "ragged",
@@ -315,6 +332,30 @@ class PlaybackStreamSpec extends SparkSpec {
       val deadline = System.currentTimeMillis() + 180000
       while (count("late") < 3 && System.currentTimeMillis() < deadline) Thread.sleep(100)
       assert(count("late") >= 3, "late-arriving file played")
+    } finally raw.stop()
+  }
+
+  test("an idle postProcess=delete stream waiting for its next file holds its open-fd count") {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case u: com.sun.management.UnixOperatingSystemMXBean => u
+      case other => cancel(s"no open-fd count on ${other.getClass.getName}")
+    }
+    val dir = Files.createTempDirectory("idle")
+    val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = "vib",
+      postProcessMethod = PostProcess.Delete)
+    // a 10 ms trigger is the default trigger's idle polling delay: every
+    // empty poll lists the directory looking for a file
+    val raw = PlaybackStream.raw(spark, cfg)
+      .writeStream.format("memory").queryName("idle_fd")
+      .trigger(Trigger.ProcessingTime(10)).start()
+    try {
+      Thread.sleep(1000)
+      val before = os.getOpenFileDescriptorCount
+      Thread.sleep(3000)
+      val grown = os.getOpenFileDescriptorCount - before
+      assert(raw.isActive && count("idle_fd") == 0)
+      // a listing that leaks one fd per poll would add ~300 here
+      assert(grown < 60, s"open fds grew by $grown over 3 s of idle polling")
     } finally raw.stop()
   }
 
