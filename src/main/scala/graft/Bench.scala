@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main. Runs the headline queries (the
   * `bench = true` subset of the registry: heavy relational joins/aggs,
   * dedup, ANN, text analysis) against `SPARK_GRAFT_SF_DIR`, plus the
@@ -14,15 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     // ERROR, not WARN: the repeat runs re-cache identical plans by
     // design (CacheManager dedups them), and the resulting WARN spam
     // is the only thing WARN level ever printed here
@@ -147,7 +137,7 @@ object Bench {
         "queries" -> queriesPhase),
       queryContention = qSampler.labelStats,
       prior = prior, priorName = priorName,
-      cpus = cpus, master = s"local[$cpus]"))
+      cpus = Session.cpus.toString, master = spark.sparkContext.master))
     spark.stop()
   }
 
@@ -323,13 +313,13 @@ object Bench {
     // in-band scaling contract (r16): the knobs the harness actually
     // honored, so the driver can confirm $SPARK_GRAFT_CPUS /
     // $SPARK_GRAFT_SF_DIR reached the session without reading the code
-    // (Bench.scala builds master local[$cpus] + shuffle.partitions from
+    // (graft.Session builds master local[cpus] + shuffle.partitions from
     // the same env var; flat low/high-core ratios at sf0.1 are fixed-
     // cost saturation, not an ignored knob — evidence/scaling_r16.json
     // shows the same binary separating 8 vs 32 cores at sf1)
-    // cpus is a number when SPARK_GRAFT_CPUS holds one, else a string
-    // (`*` is a valid local[*] master); every string goes through
-    // Json.str so the line parses whatever the env holds
+    // cpus renders as a number when it parses as one, else as a
+    // string; every string goes through Json.str so the line parses
+    // whatever the caller passes
     val envJson = if (cpus.isEmpty) ""
       else s""""cpus":${cpus.toIntOption.fold(Json.str(cpus))(_.toString)},"master":${Json.str(master)},"sf_dir":${Json.str(sfDir)},"""
     f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson"queries":$qs,"warmup_queries":$wq,"memoized":$memo,"failed":$failed,"bench_failures":$nFailed,"playback_rps":$playbackRps%.0f,"playback_rps_agg8":$playbackAgg8%.0f,"host_probe_sec":$probeJson,"host_noise_factor":$noise%.2f,"host_sentinel":$sentJson,"host_scaling_ratio":$worstScaling%.2f,"phase_contention":$phaseJson,"query_contention":$qcJson,"regressions":$regressions,"prior_bench":$priorJson,"playback_stop_interrupts":$stopInterrupts,"task_failed":$taskFailed,"task_killed":$taskKilled,"sf":${Json.str(sfDir)}}"""

@@ -400,13 +400,7 @@ object PlaybackBench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     val seconds = args.headOption.map(_.toInt).getOrElse(10)
     val streams = args.drop(1).headOption.map(_.toInt).getOrElse(1)
@@ -418,8 +412,8 @@ object PlaybackBench {
     // measure ~3.6-3.9M rps where local[32] measures ~8.2M at the
     // SAME noise factor (measured same-HEAD, same window), because
     // each query needs scheduler + parse threads. Standalone runs
-    // default SPARK_GRAFT_CPUS=8; set it to 32 for a
-    // driver-comparable aggregate.
+    // use the host's cores (graft.Session); set SPARK_GRAFT_CPUS=32
+    // to compare with the 32-core aggregates on record.
     val probeBefore = cpuProbe()
     val sentBefore = hostSentinel()
     val (rps, phase) = sampledPhase {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Scoped-conf planning for bounded iterative loops.
   *
@@ -12,24 +12,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * engine's sequential mains but a foot-gun for any concurrent caller
   * (a query planned in the same session mid-loop would silently plan
   * under the loop's confs). The fix is structural: plan the loop in a
-  * CLONED session (`SparkSession.newSession` — same SparkContext,
-  * shared cache and checkpoint blocks, isolated runtime conf,
-  * builder-time options and extensions inherited), so the caller's
-  * session is never touched and no restore can be missed.
+  * CLONED session (`cloneSession` — same SparkContext, shared cache
+  * and checkpoint blocks, extensions inherited, and a COPY of the
+  * caller's runtime SQL conf, so ANSI mode, session time zone and
+  * case sensitivity set by the caller hold inside the loop too), so
+  * the caller's session is never touched and no restore can be missed.
   *
-  * Frames cross sessions through a global temp view (the public-API
-  * hand-off for a logical plan); Dataset analysis is eager, so the
-  * view is dropped as soon as the re-bound frame is constructed.
-  * Values are unchanged by construction — the plan is identical, only
-  * the planning conf differs, and the loop confs used here (AQE off,
+  * Frames cross sessions as their analyzed logical plan, re-wrapped in
+  * the target session — no catalog entry is written. Values are
+  * unchanged by construction — the plan is identical, only the
+  * planning conf differs, and the loop confs used here (AQE off,
   * partition counts) never change arithmetic.
   */
 private[graft] object LoopSession {
 
-  /** A cloned session carrying loop-scoped SQL confs. The caller's
-    * session is never mutated. */
+  /** A clone of the caller's session (its runtime SQL confs included)
+    * carrying loop-scoped SQL confs on top. The caller's session is
+    * never mutated. */
   def cloned(spark: SparkSession, confs: (String, String)*): SparkSession = {
-    val s = spark.newSession()
+    val s = GraftBridge.cloneSession(spark)
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
@@ -55,23 +56,9 @@ private[graft] object LoopSession {
     math.max(1L, math.min(cap.toLong, n / 500000L + 1L)).toInt
   }
 
-  /** Re-bind `df` to `target` (same SparkContext): the logical plan
-    * crosses sessions through a uniquely-named global temp view,
-    * dropped immediately after the (eager) analysis of the returned
-    * frame resolves it. */
-  def rebind(df: DataFrame, target: SparkSession): DataFrame = {
+  /** Re-bind `df` to `target` (same SparkContext): the same analyzed
+    * plan, planned and executed under `target`'s conf. */
+  def rebind(df: DataFrame, target: SparkSession): DataFrame =
     if (df.sparkSession eq target) df
-    else {
-      val name = "graft_rebind_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      df.createOrReplaceGlobalTempView(name)
-      try {
-        val db = df.sparkSession.conf
-          .get("spark.sql.globalTempDatabase", "global_temp")
-        target.table(s"$db.$name")
-      } finally {
-        df.sparkSession.catalog.dropGlobalTempView(name)
-      }
-    }
-  }
+    else GraftBridge.ofRows(target, df.queryExecution.analyzed)
 }

@@ -37,7 +37,10 @@ object CsvPlayback {
   val RowIdx = "_row_idx"
 
   /** First `n` physical lines of the (possibly compressed) file,
-    * driver-side — the metadata-combine read (csvplayback.py:664-665). */
+    * driver-side — the metadata-combine read (csvplayback.py:664-665).
+    * `readLine` also ends a line at a lone `\r`, as the batch path's
+    * `textFile` scan does; the stream reads its head by its own reader's
+    * rule instead (`PlaybackIO.headLines`). */
   def headLines(spark: SparkSession, path: String, n: Int): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -79,9 +82,13 @@ object CsvPlayback {
     * 100 GB. Pandas' chunked reader infers per-chunk anyway
     * (csvplayback.py:638-641), so a head sample is no less faithful. */
   def inferFromHead(spark: SparkSession, path: String, dataStart: Int,
-      sampleLines: Int = InferSampleLines): org.apache.spark.sql.types.StructType = {
+      sampleLines: Int = InferSampleLines): org.apache.spark.sql.types.StructType =
+    inferFromLines(spark, headLines(spark, path, dataStart + sampleLines).drop(dataStart))
+
+  /** [[inferFromHead]] over an already-read sample of data lines. */
+  def inferFromLines(spark: SparkSession,
+      sample: Seq[String]): org.apache.spark.sql.types.StructType = {
     import spark.implicits._
-    val sample = headLines(spark, path, dataStart + sampleLines).drop(dataStart)
     spark.read
       .option("header", "false")
       .option("inferSchema", "true")

@@ -236,11 +236,10 @@ case class PlaybackOffset(totalRows: Long, file: Option[String] = None,
     fileStart: Long = 0L, fileBytes: Long = -1L) extends Offset {
   override def json(): String = file match {
     case Some(f) =>
-      val esc = f.replace("\\", "\\\\").replace("\"", "\\\"")
       // fileBytes is the anchor's identity: a same-named file that
       // appears after the anchored one was rotated away must not be
       // mistaken for it on recovery (its bytes differ)
-      s"""{"totalRows":$totalRows,"file":"$esc","fileStart":$fileStart,"fileBytes":$fileBytes}"""
+      s"""{"totalRows":$totalRows,"file":${graft.Json.str(f)},"fileStart":$fileStart,"fileBytes":$fileBytes}"""
     case None =>
       // fileStart must survive even between files: it is where the NEXT
       // file begins, and dropping it across a restart re-bases the
@@ -250,16 +249,13 @@ case class PlaybackOffset(totalRows: Long, file: Option[String] = None,
 }
 
 object PlaybackOffset {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   def parse(json: String): PlaybackOffset = {
-    val rows = """"totalRows"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val file = """"file"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(json)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    val start = """"fileStart"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val bytes = """"fileBytes"\s*:\s*(-?\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong).getOrElse(-1L)
-    PlaybackOffset(rows, file, start, bytes)
+    val o = mapper.readTree(json)
+    PlaybackOffset(o.path("totalRows").asLong(0L),
+      Option(o.get("file")).map(_.asText), o.path("fileStart").asLong(0L),
+      o.path("fileBytes").asLong(-1L))
   }
 }
 
@@ -561,6 +557,23 @@ private[streaming] object PlaybackIO {
     val raw = hp.getFileSystem(conf).open(hp)
     if (compressed) codecs.getCodec(hp).createInputStream(raw)
     else { if (seekByte > 0) raw.seek(seekByte); raw }
+  }
+
+  /** The file's first `n` lines as UTF-8 strings, split by the same
+    * rule as the index and the reader ([[ByteLineReader]]), so the
+    * driver's header, sample and meta reads see the lines the stream
+    * plays. */
+  def headLines(path: String, n: Int): Seq[String] = {
+    val r = new ByteLineReader(open(path, isCompressed(path)))
+    try {
+      val out = Seq.newBuilder[String]
+      var k = 0
+      while (k < n && r.next()) {
+        out += new String(r.bytes, r.start, r.length, java.nio.charset.StandardCharsets.UTF_8)
+        k += 1
+      }
+      out.result()
+    } finally r.close()
   }
 }
 

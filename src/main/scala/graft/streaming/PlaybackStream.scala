@@ -49,7 +49,7 @@ object PlaybackStream {
           case HeaderMethod.DoNotSkip => 0
         }
         val headerIdx = skip + cfg.rowIndexForColumnNames
-        CsvPlayback.headLines(spark, path, headerIdx + 1).last.split(",", -1).toSeq
+        PlaybackIO.headLines(path, headerIdx + 1).last.split(",", -1).toSeq
     }
   }
 
@@ -99,7 +99,7 @@ object PlaybackStream {
 
     val withMeta = cfg.headerMethod match {
       case HeaderMethod.PassInDatapoint =>
-        val meta = CsvPlayback.headLines(spark, file, cfg.noOfRows).mkString("_")
+        val meta = PlaybackIO.headLines(file, cfg.noOfRows).mkString("_")
         validated.withColumn(cfg.dataPointForCombine, lit(meta))
       case _ => validated
     }
@@ -148,7 +148,9 @@ object PlaybackStream {
   def inferDtypes(spark: SparkSession, cfg: PlaybackConfig, path: String,
       parseNames: Seq[String]): Map[String, DataType] = {
     val dataStart = CsvPlaybackStream.dataStartLine(cfg)
-    CsvPlayback.inferFromHead(spark, path, dataStart).fields.zipWithIndex.collect {
+    val sample = PlaybackIO.headLines(path, dataStart + CsvPlayback.InferSampleLines)
+      .drop(dataStart)
+    CsvPlayback.inferFromLines(spark, sample).fields.zipWithIndex.collect {
       case (f, i) if i < parseNames.length => parseNames(i) -> f.dataType
     }.toMap
   }
@@ -181,7 +183,7 @@ object PlaybackStream {
       // row_idx is monotone across replays so timestamps never repeat
       val fmt = Strftime.toJava(cfg.timestampFormat)
       val dataStart = CsvPlaybackStream.dataStartLine(cfg)
-      val head = CsvPlayback.headLines(spark, file, dataStart + 2).takeRight(2)
+      val head = PlaybackIO.headLines(file, dataStart + 2).takeRight(2)
       require(head.length == 2, "use csv sample delta needs at least 2 data rows")
       val tsIdx = {
         val names = resolveColumns(spark, cfg, file)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.operators.Bpe
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: BPE train wall-time vs merge count on the wide-vocab
@@ -18,11 +17,7 @@ object BpeScaleBench {
     val counts =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(64, 128, 256, 512)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val wide = Tables(spark, sfDir, "orders")

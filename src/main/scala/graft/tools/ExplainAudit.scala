@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.QueryRegistry
-import org.apache.spark.sql.SparkSession
 
 /** Plan audit (dev tool): for each registry query, summarize the
   * physical plan — parquet pushed filters, read schema width, join
@@ -159,11 +158,7 @@ object ExplainAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val only = args.headOption
     // capture one representative PRE-checkpoint round body per

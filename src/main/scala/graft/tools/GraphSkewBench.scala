@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Skewed-graph bench (dev tool, verdict r12 §5): the registry's graph
@@ -30,12 +30,7 @@ object GraphSkewBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = graft.Tables(spark, sfDir, "documents").select("doc_id")

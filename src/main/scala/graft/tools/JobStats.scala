@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.QueryRegistry
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Structural cost probe (dev scratch): runs each named query once and
   * reports scheduler-level counts — jobs, stages, tasks, shuffle bytes
@@ -15,14 +14,7 @@ import org.apache.spark.sql.SparkSession
 object JobStats {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.names.foreach(n => graft.Tables(spark, sfDir, n).count())
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Second-shape fixture generator (dev tool): rewrites a driver
@@ -62,11 +62,7 @@ object ReshapeFixture {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("/tmp/graft_reshaped")
     shapeSalt = args.lift(2).map(_.toLong).getOrElse(0L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     // Write a SINGLE parquet file per table (the selfcheck oracle reads

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up fixture generator (dev tool): replicate a driver testdata
@@ -30,11 +30,7 @@ object ScaleFixture {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
 

@@ -47,12 +47,7 @@ object ZipfCorpus {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20000L)
     val cap = args.drop(1).headOption.map(_.toLong).getOrElse(500L)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val corpus = docs(spark, n).cache()
     corpus.count()

@@ -22,6 +22,18 @@ class CleanCsvSpec extends SparkSpec {
     assert(r.getString(1).contains("0.0071383551"))
   }
 
+  test("process writes the extracted channels as one headed CSV (PD:150-153)") {
+    val raw = CsvPlayback.readFile(spark, PlaybackConfig(), fixture("raw_fledge_export.csv"))
+    val out = java.nio.file.Files.createTempDirectory("clean-out").resolve("csv").toString
+    CleanCsv.process(raw, out, choice = "fill", method = "linear")
+    val written = spark.read.option("header", "true").csv(out)
+    assert(written.columns.toSeq == Seq("channel1", "channel2", "user_ts"))
+    assert(written.count() == 2)
+    val first = written.filter(col("user_ts").endsWith(".000000+0000")).head()
+    assert(first.getString(0).contains("0.0083912037"))
+    assert(first.getString(1).contains("0.0071383551"))
+  }
+
   test("linear interpolation, limit_direction=both (PD:124-126)") {
     // v1: 1.0, null, 3.0, 4.0 → null between 1 and 3 at distance 1/2 → 2.0
     val df = CleanCsv.interpolateLinear(interp, "v1")

@@ -315,6 +315,23 @@ class PlaybackStreamSpec extends SparkSpec {
     assert(metas.toSeq == Seq("device=vib-007_firmware=1.4.2"))
   }
 
+  test("head reads split lines like the reader: a lone \\r does not end a line") {
+    val dir = Files.createTempDirectory("lonecr")
+    val f = dir.resolve("lonecr.csv")
+    Files.writeString(f, "meta\rmore\nc1,c2\n1,2\n3,4\n")
+    val skip = PlaybackConfig(csvDirName = dir.toString, csvFileName = "lonecr",
+      headerMethod = HeaderMethod.SkipRows, noOfRows = 1)
+    assert(PlaybackStream.resolveColumns(spark, skip, f.toString) == Seq("c1", "c2"))
+    // meta line, header, inference sample and played rows agree
+    val cfg = skip.copy(headerMethod = HeaderMethod.PassInDatapoint,
+      postProcessMethod = PostProcess.ContinuePlaying)
+    runStream(cfg, "lonecr", () => count("lonecr") >= 2)
+    val rows = spark.sql(
+      "SELECT c1, c2, metadata FROM lonecr ORDER BY row_idx LIMIT 2").collect()
+    assert(rows.map(r => (r.get(0), r.get(1), r.getString(2))).toSeq ==
+      Seq((1, 2, "meta\rmore"), (3, 4, "meta\rmore")))
+  }
+
   test("empty directory: stream starts, idles without error, picks up a late file") {
     val dir = Files.createTempDirectory("late")
     val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = "vib",
@@ -449,6 +466,18 @@ class PlaybackStreamSpec extends SparkSpec {
     // offset JSON roundtrips the identity
     val o = PlaybackOffset(5L, Some(f), 2L, realBytes)
     assert(PlaybackOffset.parse(o.json()) == o)
+  }
+
+  test("offset JSON: plain paths keep their bytes, any path round-trips") {
+    import graft.streaming.PlaybackOffset
+    assert(PlaybackOffset(5L, Some("/data/play/vibration.csv"), 2L, 123L).json() ==
+      """{"totalRows":5,"file":"/data/play/vibration.csv","fileStart":2,"fileBytes":123}""")
+    assert(PlaybackOffset(7L, None, 3L).json() == """{"totalRows":7,"fileStart":3}""")
+    // the offset log is one line per source: no raw control char may land in it
+    val odd = PlaybackOffset(1L, Some("/d/a\"b\\c\td\ne.csv"), 0L, 9L)
+    assert(!odd.json().exists(_ < ' '), odd.json())
+    assert(PlaybackOffset.parse(odd.json()) == odd)
+    assert(PlaybackOffset.parse("""{"totalRows":4}""") == PlaybackOffset(4L))
   }
 
   test("non-replay recovery clamps a range that overruns the file (no wrap re-emit)") {

@@ -133,6 +133,12 @@ class SamplingSpec extends SparkSpec {
     val nhp = spark.sql(
       "SELECT ngram_hash_pairs(array('a','b','c'), 2) AS p").head().getSeq[org.apache.spark.sql.Row](0)
     assert(nhp.length == 2 && nhp.head != nhp(1))
+    // malformed calls are rejected with the function's own message
+    val arity = intercept[Exception](spark.sql("SELECT vec_dot(array(1.0d))").collect())
+    assert(arity.getMessage.contains("vec_dot(a, b)"), arity.getMessage)
+    val nonLiteral = intercept[Exception](
+      spark.sql("SELECT minhash64(array('a'), 1 + 1)").collect())
+    assert(nonLiteral.getMessage.contains("must be an integer literal"), nonLiteral.getMessage)
   }
 
   test("perGroupCap keeps the k best per group, all of an under-k group") {

@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide SparkSession). */
+/** Shared session for all suites (one JVM-wide SparkSession): the
+  * production conf of [[Session]], pinned at 4 cores so partition
+  * counts do not vary with the host. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(cpus = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
