@@ -137,7 +137,7 @@ object Bench {
         "queries" -> queriesPhase),
       queryContention = qSampler.labelStats,
       prior = prior, priorName = priorName,
-      cpus = Session.cpus.toString, master = spark.sparkContext.master))
+      cpus = Some(Session.cpus), master = spark.sparkContext.master))
     spark.stop()
   }
 
@@ -256,7 +256,7 @@ object Bench {
       queryContention: Map[String, PlaybackBench.PhaseStats] = Map.empty,
       prior: Map[String, Double] = Map.empty,
       priorName: Option[String] = None,
-      cpus: String = "", master: String = ""): String = {
+      cpus: Option[Int] = None, master: String = ""): String = {
     val qs = results.map { case (k, r) => "\"" + k + f"""":${r.sec}%.3f""" }
       .mkString("{", ",", "}")
     // warmup-pass walls: where one-time costs live (JIT, page cache,
@@ -316,12 +316,11 @@ object Bench {
     // (graft.Session builds master local[cpus] + shuffle.partitions from
     // the same env var; flat low/high-core ratios at sf0.1 are fixed-
     // cost saturation, not an ignored knob — evidence/scaling_r16.json
-    // shows the same binary separating 8 vs 32 cores at sf1)
-    // cpus renders as a number when it parses as one, else as a
-    // string; every string goes through Json.str so the line parses
-    // whatever the caller passes
-    val envJson = if (cpus.isEmpty) ""
-      else s""""cpus":${cpus.toIntOption.fold(Json.str(cpus))(_.toString)},"master":${Json.str(master)},"sf_dir":${Json.str(sfDir)},"""
+    // shows the same binary separating 8 vs 32 cores at sf1). No cpus
+    // gives the legacy shape; every string goes through Json.str so the
+    // line parses whatever the caller passes
+    val envJson = cpus.fold("")(n =>
+      s""""cpus":$n,"master":${Json.str(master)},"sf_dir":${Json.str(sfDir)},""")
     f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson"queries":$qs,"warmup_queries":$wq,"memoized":$memo,"failed":$failed,"bench_failures":$nFailed,"playback_rps":$playbackRps%.0f,"playback_rps_agg8":$playbackAgg8%.0f,"host_probe_sec":$probeJson,"host_noise_factor":$noise%.2f,"host_sentinel":$sentJson,"host_scaling_ratio":$worstScaling%.2f,"phase_contention":$phaseJson,"query_contention":$qcJson,"regressions":$regressions,"prior_bench":$priorJson,"playback_stop_interrupts":$stopInterrupts,"task_failed":$taskFailed,"task_killed":$taskKilled,"sf":${Json.str(sfDir)}}"""
   }
 }

@@ -5,7 +5,7 @@ import graft.config.PlaybackConfig
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -55,9 +55,9 @@ object CsvPlaybackStream {
   val quiesce = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Sub-partition granularity: the seek index records the byte offset
-    * of every SUB_SPLIT-th line, and a batch range splits into partitions
-    * of at most SUB_SPLIT rows that end at those samples, so readers
-    * position in O(1). */
+    * of every SUB_SPLIT-th line, and a plain file's range splits into
+    * partitions of at most SUB_SPLIT rows that end at those samples, so
+    * readers position in O(1). */
   val SUB_SPLIT = 16384L
 
   /** Byte-range size for the distributed index-build job. */
@@ -187,6 +187,33 @@ object CsvPlaybackStream {
     }
   }
 
+  /** Reader partitions for global rows [s, e) of `path`, whose data
+    * rows begin at global row `fileStart`. The one partition cutter of
+    * the micro-batch and the batch scan: a range splits at replay wrap
+    * boundaries and at the index's SUB_SPLIT samples, so a large range
+    * reads in parallel across cores and every partition but the first
+    * (and the one after a wrap, which skips the header lines) seeks
+    * straight to its first row with no line skip. A compressed file has
+    * no samples and no seek, so each contiguous range is one partition:
+    * a cut would make every reader decompress from byte 0. */
+  def planPartitions(path: String, index: FileLineIndex, dataStart: Int,
+      fileRows: Long, fileStart: Long, s: Long, e: Long,
+      emitTsMicros: Long): Array[InputPartition] = {
+    val parts = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    var cur = s
+    while (cur < e) {
+      val rel = (cur - fileStart) % fileRows
+      val line = dataStart + rel
+      val cut = index.nextSampleLine(line).fold(Long.MaxValue)(_ - line)
+      val take = math.min(math.min(e - cur, fileRows - rel), cut)
+      val (seekByte, skipLines) = index.offsetFor(line).getOrElse((-1L, line))
+      parts += PlaybackInputPartition(path, index.compressed, rel, rel + take, cur, s,
+        emitTsMicros, seekByte, skipLines)
+      cur += take
+    }
+    parts.toArray
+  }
+
   /** First physical data line of the file for a config (header lines
     * consumed before data starts, csvplayback.py:579-659). */
   def dataStartLine(cfg: PlaybackConfig): Int = {
@@ -208,20 +235,42 @@ class CsvPlaybackSourceProvider extends TableProvider with DataSourceRegister {
     CsvPlaybackStream.SCHEMA
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new CsvPlaybackTable(PlaybackConfig.fromOptions(properties.asScala.toMap))
+    new CsvPlaybackTable(PlaybackConfig.fromOptions(properties.asScala.toMap),
+      Option(properties.get("path")))
 }
 
-class CsvPlaybackTable(cfg: PlaybackConfig) extends Table with SupportsRead {
-  override def name(): String = s"csvplayback(${cfg.csvDirName}/${cfg.csvFileName})"
+/** The playback table. Streamed, it plays the config's file pattern; a
+  * batch read (`load(path)`) reads every data row of that one file once,
+  * through the same partition cutter and reader as the stream, with
+  * `row_idx` = the data row and `pos_in_batch` = `row_idx`. The batch
+  * file's line index is built here, once per `load`, so every action on
+  * the loaded frame plans from it (a zero-byte file fails the load). */
+class CsvPlaybackTable(cfg: PlaybackConfig, path: Option[String])
+    extends Table with SupportsRead {
+  private val batchIndex = path.map(p =>
+    CsvPlaybackStream.buildLineIndex(org.apache.spark.SparkContext.getOrCreate(), p))
+
+  override def name(): String =
+    path.getOrElse(s"csvplayback(${cfg.csvDirName}/${cfg.csvFileName})")
   override def schema(): StructType = CsvPlaybackStream.SCHEMA
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan {
+    new ScanBuilder with Scan with Batch {
       override def build(): Scan = this
       override def readSchema(): StructType = CsvPlaybackStream.SCHEMA
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
         new CsvPlaybackMicroBatchStream(cfg)
+      override def toBatch: Batch = this
+      override def planInputPartitions(): Array[InputPartition] = {
+        val index = batchIndex.getOrElse(
+          throw new IllegalArgumentException("a batch read needs load(path)"))
+        val dataStart = CsvPlaybackStream.dataStartLine(cfg)
+        val rows = math.max(0L, index.totalLines - dataStart)
+        CsvPlaybackStream.planPartitions(path.get, index, dataStart, rows, 0L, 0L, rows,
+          System.currentTimeMillis() * 1000L)
+      }
+      override def createReaderFactory(): PartitionReaderFactory = new PlaybackReaderFactory()
     }
 }
 
@@ -453,29 +502,9 @@ class CsvPlaybackMicroBatchStream(cfg: PlaybackConfig)
     // `% fileRows` wrap below would re-emit rows from the top of the
     // file inside a single non-replay batch.
     val eEff = if (replay) e else math.min(e, fileStartOffset + fileRows)
-    val path = currentFile.get
-    val dataStart = CsvPlaybackStream.dataStartLine(cfg)
     val emitTs = if (lastEmitMicros == 0) System.currentTimeMillis() * 1000L else lastEmitMicros
-    // map [s, e) global rows onto file-relative ranges, split at replay
-    // wrap boundaries AND at the index's SUB_SPLIT samples, so a large
-    // burst reads in parallel across cores and every partition but a
-    // batch's first (and the one after a wrap, which skips the header
-    // lines) seeks straight to its first row with no line skip.
-    // Compressed files have no samples: they cut every SUB_SPLIT rows
-    // and each reader decompresses and line-skips from the top.
-    val parts = scala.collection.mutable.ArrayBuffer[InputPartition]()
-    var cur = s
-    while (cur < eEff) {
-      val rel = (cur - fileStartOffset) % fileRows
-      val line = dataStart + rel
-      val cut = lineIndex.nextSampleLine(line).fold(CsvPlaybackStream.SUB_SPLIT)(_ - line)
-      val take = math.min(math.min(eEff - cur, fileRows - rel), cut)
-      val (seekByte, skipLines) = lineIndex.offsetFor(line).getOrElse((-1L, line))
-      parts += PlaybackInputPartition(path, lineIndex.compressed, rel, rel + take, cur, s,
-        emitTs, seekByte, skipLines)
-      cur += take
-    }
-    parts.toArray
+    CsvPlaybackStream.planPartitions(currentFile.get, lineIndex,
+      CsvPlaybackStream.dataStartLine(cfg), fileRows, fileStartOffset, s, eEff, emitTs)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -3,8 +3,6 @@ package graft.streaming
 import graft.config.Enums._
 import graft.config.PlaybackConfig
 import graft.functions.CsvLine
-import graft.schema.UseColumns
-import graft.sources.CsvPlayback
 import graft.timefmt.Strftime
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,48 +61,54 @@ object PlaybackStream {
       .headOption.getOrElse(
         throw new java.io.FileNotFoundException(s"no csv matching '${cfg.csvFileName}' in $dir"))
       .toString
+    applyTimestampStyle(spark, cfg, withReportNaN(parse(spark, cfg, file, raw(spark, cfg)), cfg),
+      file)
+  }
 
-    val base = raw(spark, cfg)
-
-    val parsed: DataFrame =
+  /** The one parse of playback lines, for the stream and the batch read
+    * ([[graft.sources.CsvPlayback.readFile]]) alike: `lines` is the
+    * source's (value, row_idx, pos_in_batch, emit_ts) frame of `file`.
+    * Ragged mode pivots every line (csvplayback.py:703-711); the fixed
+    * modes split each line into the resolved columns and cast them to
+    * their inferred type, then to an explicit `useColumns` type (`str`
+    * keeps the raw text). The PassInDatapoint meta is attached last
+    * (csvplayback.py:661-671). */
+  def parse(spark: SparkSession, cfg: PlaybackConfig, file: String,
+      lines: DataFrame): DataFrame = {
+    val carried = lines.columns.filter(_ != "value").map(col).toSeq
+    val parsed =
       if (cfg.variableCols) {
-        // ragged pivot (csvplayback.py:703-711) on the line stream
-        base.select(col("row_idx"), col("pos_in_batch"), col("emit_ts"),
-            posexplode(split(col("value"), ",", -1)).as(Seq("pos", "v")))
+        lines.select(carried :+ posexplode(split(col("value"), ",", -1)).as(Seq("pos", "v")): _*)
           .filter(col("v") =!= "")
-          .select(col("row_idx"), col("pos_in_batch"), col("emit_ts"),
+          .select(carried ++ Seq(
             concat(lit(cfg.autoGeneratePrefix + "_"), (col("pos") + 1).cast("string"))
               .as("datapoint"),
-            col("v").as("value"))
+            col("v").as("value")): _*)
       } else {
         val names = resolveColumns(spark, cfg, file)
+        require(names.nonEmpty, "columnMethod=explicit needs a non-empty useColumns")
         val spec = cfg.parsedUseColumns
         val parseNames = names.zipWithIndex.map { case (n, i) => if (n.isEmpty) s"_drop$i" else n }
         val parseSchema = StructType(parseNames.map(StructField(_, StringType)))
-        val inferred: Map[String, DataType] =
-          if (names.exists(n => n.nonEmpty && !spec.dtypes.contains(n)))
-            inferDtypes(spark, cfg, file, parseNames)
-          else Map.empty
-        val withCols = base.withColumn("_parsed", parseLine(col("value"), parseSchema))
+        val inferred = inferDtypes(spark, cfg, file, parseNames)
         val kept = names.filter(_.nonEmpty).map { n =>
-          spec.dtypes.get(n).orElse(inferred.get(n).filter(_ != StringType)) match {
-            case Some(dt) => col("_parsed")(n).cast(dt).as(n)
-            case None => col("_parsed")(n).as(n)
-          }
+          val text = col("_parsed")(n)
+          val typed = inferred.get(n).filter(_ != StringType).fold(text)(text.cast)
+          (spec.dtypes.get(n) match {
+            case Some(StringType) => text
+            case Some(dt) => typed.cast(dt)
+            case None => typed
+          }).as(n)
         }
-        withCols.select(kept ++ Seq(col("row_idx"), col("pos_in_batch"), col("emit_ts")): _*)
+        lines.withColumn("_parsed", parseLine(col("value"), parseSchema))
+          .select(kept ++ carried: _*)
       }
-
-    val validated = withReportNaN(parsed, cfg)
-
-    val withMeta = cfg.headerMethod match {
+    cfg.headerMethod match {
       case HeaderMethod.PassInDatapoint =>
-        val meta = PlaybackIO.headLines(file, cfg.noOfRows).mkString("_")
-        validated.withColumn(cfg.dataPointForCombine, lit(meta))
-      case _ => validated
+        parsed.withColumn(cfg.dataPointForCombine,
+          lit(PlaybackIO.headLines(file, cfg.noOfRows).mkString("_")))
+      case _ => parsed
     }
-
-    applyTimestampStyle(spark, cfg, withMeta, file)
   }
 
   /** A raw line as the struct of strings `parseSchema` names. Quote-free,
@@ -115,7 +119,7 @@ object PlaybackStream {
     coalesce(CsvLine.split_quote_free(value, parseSchema),
       from_csv(value, parseSchema, Map("escape" -> "\"")))
 
-  /** Streaming twin of the batch `ignoreNaN=report` stage
+  /** Streaming form of the batch `ignoreNaN=report` check
     * (csvplayback.py:681-691, validated per chunk before the timestamp
     * rewrite, fixed-column modes only — same call order here): each
     * datapoint column is wrapped in a codegen'd null/blank guard that
@@ -139,20 +143,39 @@ object PlaybackStream {
     df.select(checked.toIndexedSeq: _*)
   }
 
-  /** Driver-side dtype inference for untyped columns: Spark's own CSV
-    * inference run over a head sample of data lines — the streaming
-    * stand-in for pandas' chunked inference (csvplayback.py:638-641),
-    * and byte-for-byte the same inference code the batch reader uses
-    * ([[CsvPlayback]]'s `parseCsv`), so batch and stream dtypes agree.
-    * One tiny local job at stream build, never per-batch. */
+  /** Rows of the head sample used for schema inference. */
+  val InferSampleLines = 1000
+
+  /** Driver-side dtype inference: Spark's own CSV inference (the code
+    * `spark.read.csv(inferSchema=true)` runs) over the first
+    * [[InferSampleLines]] data lines, as read by [[PlaybackIO.headLines]]
+    * — the stand-in for pandas' chunked inference
+    * (csvplayback.py:638-641). One tiny local job when a read is built,
+    * never per batch and never a second pass over the file; a later value
+    * that does not parse as its column's type fails the cast that
+    * [[parse]] applies. A file header whose column count differs from
+    * the data's fails here. */
   def inferDtypes(spark: SparkSession, cfg: PlaybackConfig, path: String,
       parseNames: Seq[String]): Map[String, DataType] = {
+    import spark.implicits._
     val dataStart = CsvPlaybackStream.dataStartLine(cfg)
-    val sample = PlaybackIO.headLines(path, dataStart + CsvPlayback.InferSampleLines)
-      .drop(dataStart)
-    CsvPlayback.inferFromLines(spark, sample).fields.zipWithIndex.collect {
-      case (f, i) if i < parseNames.length => parseNames(i) -> f.dataType
-    }.toMap
+    val sample = PlaybackIO.headLines(path, dataStart + InferSampleLines).drop(dataStart)
+    val inferred = spark.read
+      .option("header", "false")
+      .option("inferSchema", "true")
+      // pandas does not parse dates unless told to (parse_dates); keep
+      // date-looking fields as strings by making the inference formats
+      // unmatchable
+      .option("timestampFormat", "'graft-never'")
+      .option("dateFormat", "'graft-never'")
+      // RFC4180 "" quote escaping, like pandas (Spark defaults to \)
+      .option("escape", "\"")
+      .csv(spark.createDataset(sample))
+      .schema
+    require(cfg.columnMethod != ColumnMethod.PickFromFile || inferred.isEmpty ||
+      inferred.length == parseNames.length,
+      s"header declares ${parseNames.length} columns, data has ${inferred.length}")
+    parseNames.zip(inferred.fields.map(_.dataType)).toMap
   }
 
   /** The four timestamp styles on the stream (SURVEY.md §2.4). */

@@ -54,7 +54,7 @@ class BenchHarnessSpec extends AnyFunSuite {
   test("renderJson emits the in-band scaling contract (cpus/master/sf_dir)") {
     val json = Bench.renderJson(
       Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf",
-      cpus = "32", master = "local[32]")
+      cpus = Some(32), master = "local[32]")
     assert(json.contains(""""cpus":32"""), json)
     assert(json.contains(""""master":"local[32]""""), json)
     assert(json.contains(""""sf_dir":"/tmp/sf""""), json)
@@ -65,22 +65,16 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(legacy.contains(""""unit":"sec","queries""""), legacy)
   }
 
-  test("renderJson keeps a non-numeric SPARK_GRAFT_CPUS (local[*]) parseable") {
-    val json = Bench.renderJson(
-      Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf",
-      cpus = "*", master = "local[*]")
-    val doc = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    assert(doc.get("cpus").isTextual && doc.get("cpus").asText == "*", json)
-    assert(doc.get("master").asText == "local[*]", json)
+  test("renderJson writes cpus as a number and escapes env-supplied strings") {
     val numeric = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
       Bench.renderJson(Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf",
-        cpus = "8", master = "local[8]"))
+        cpus = Some(8), master = "local[8]"))
     assert(numeric.get("cpus").isInt && numeric.get("cpus").asInt == 8)
     // control characters and quotes in env-supplied strings are escaped
     val odd = "/tmp/s\tf\"x"
     val escaped = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
       Bench.renderJson(Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, odd,
-        cpus = "8", master = "local[8]"))
+        cpus = Some(8), master = "local[8]"))
     assert(escaped.get("sf_dir").asText == odd && escaped.get("sf").asText == odd)
   }
 

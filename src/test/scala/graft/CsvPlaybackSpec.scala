@@ -91,6 +91,34 @@ class CsvPlaybackSpec extends SparkSpec {
     java.nio.file.Files.delete(p)
   }
 
+  test("line endings: \\r\\n is stripped, a lone \\r stays inside its field") {
+    val p = java.nio.file.Files.createTempFile("crlf", ".csv")
+    java.nio.file.Files.writeString(p, "h1,h2\na\rb,1\n2,3\r\n")
+    val rows = CsvPlayback.readFile(spark, PlaybackConfig(), p.toString)
+      .orderBy("_row_idx").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(rows == Seq(("a\rb", 1), ("2", 3)))
+    java.nio.file.Files.delete(p)
+  }
+
+  test("the line index is built once per readFile, not per action") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.details.contains("buildLineIndex")) builds.incrementAndGet()
+    }
+    def settled(): Int = { Thread.sleep(500); builds.get }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = CsvPlayback.readFile(spark, PlaybackConfig(), fixture("vibration.csv"))
+      val deadline = System.currentTimeMillis() + 60000
+      while (builds.get == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(settled() == 1, "readFile builds the index")
+      assert(df.count() == 3 && df.collect().length == 3 && df.filter("channel1 > 0").count() == 3)
+      assert(settled() == 1, "actions on the frame reuse it")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("file pattern matching (csvplayback.py:503-510)") {
     val dir = java.nio.file.Files.createTempDirectory("ff")
     for (n <- Seq("b_vib.csv", "a_vib.csv", "vib.txt", "other.csv", "c_vib.csv.gz"))

@@ -14,7 +14,7 @@ import scala.collection.mutable.ArrayBuffer
   * `(row_idx, value)` sequence must equal a naive split of the file
   * (lines end at '\n', one trailing '\r' stripped), across line-ending
   * variants, multibyte UTF-8, replay wraps, chunk sizes on both sides
-  * of SUB_SPLIT and a gzip twin. */
+  * of SUB_SPLIT and a gzip twin (one partition per contiguous range). */
 class PlaybackReaderSpec extends SparkSpec {
 
   /** Physical lines of `content` under the playback line rule. */
@@ -91,10 +91,14 @@ class PlaybackReaderSpec extends SparkSpec {
       assert(parts.map(_.globalStart) == parts.scanLeft(s)((at, p) => at + p.toRow - p.fromRow).init,
         s"$what: partitions tile the batch")
       assert(parts.map(p => p.toRow - p.fromRow).sum == e - s)
-      assert(parts.forall(p => p.toRow - p.fromRow <= CsvPlaybackStream.SUB_SPLIT),
-        s"$what: at most SUB_SPLIT rows")
       assert(parts.forall(_.compressed == compressed))
-      if (!compressed) {
+      if (compressed) {
+        // no seek: one partition per contiguous file range, so a cut
+        // falls only at a replay wrap (file row 0)
+        assert(parts.tail.forall(_.fromRow == 0), s"$what: compressed cuts only at a wrap")
+      } else {
+        assert(parts.forall(p => p.toRow - p.fromRow <= CsvPlaybackStream.SUB_SPLIT),
+          s"$what: at most SUB_SPLIT rows")
         // cuts sit on index samples: after the batch's first partition
         // only a replay wrap (file row 0) skips, and only the header
         parts.tail.foreach { p =>
