@@ -69,9 +69,12 @@ object PlaybackStream {
     * ([[graft.sources.CsvPlayback.readFile]]) alike: `lines` is the
     * source's (value, row_idx, pos_in_batch, emit_ts) frame of `file`.
     * Ragged mode pivots every line (csvplayback.py:703-711); the fixed
-    * modes split each line into the resolved columns and cast them to
-    * their inferred type, then to an explicit `useColumns` type (`str`
-    * keeps the raw text). The PassInDatapoint meta is attached last
+    * modes split each line into the resolved columns and cast each from
+    * its text to its explicit `useColumns` type (`str` keeps the text; an
+    * `int` column whose sample infers as double goes through double, so
+    * it truncates), or else to its inferred type. The sample decides no
+    * typed column's type, so a value past the sample is read as the
+    * spec says. The PassInDatapoint meta is attached last
     * (csvplayback.py:661-671). */
   def parse(spark: SparkSession, cfg: PlaybackConfig, file: String,
       lines: DataFrame): DataFrame = {
@@ -93,11 +96,13 @@ object PlaybackStream {
         val inferred = inferDtypes(spark, cfg, file, parseNames)
         val kept = names.filter(_.nonEmpty).map { n =>
           val text = col("_parsed")(n)
-          val typed = inferred.get(n).filter(_ != StringType).fold(text)(text.cast)
           (spec.dtypes.get(n) match {
             case Some(StringType) => text
-            case Some(dt) => typed.cast(dt)
-            case None => typed
+            // pandas truncates a float column cast to int
+            case Some(LongType) if inferred.get(n).contains(DoubleType) =>
+              text.cast(DoubleType).cast(LongType)
+            case Some(dt) => text.cast(dt)
+            case None => inferred.get(n).filter(_ != StringType).fold(text)(text.cast)
           }).as(n)
         }
         lines.withColumn("_parsed", parseLine(col("value"), parseSchema))
@@ -153,8 +158,9 @@ object PlaybackStream {
     * (csvplayback.py:638-641). One tiny local job when a read is built,
     * never per batch and never a second pass over the file; a later value
     * that does not parse as its column's type fails the cast that
-    * [[parse]] applies. A file header whose column count differs from
-    * the data's fails here. */
+    * [[parse]] applies. A header or `useColumns` whose column count
+    * differs from the data's fails here; a file with no data lines has
+    * nothing to compare against and passes. */
   def inferDtypes(spark: SparkSession, cfg: PlaybackConfig, path: String,
       parseNames: Seq[String]): Map[String, DataType] = {
     import spark.implicits._
@@ -172,9 +178,12 @@ object PlaybackStream {
       .option("escape", "\"")
       .csv(spark.createDataset(sample))
       .schema
-    require(cfg.columnMethod != ColumnMethod.PickFromFile || inferred.isEmpty ||
-      inferred.length == parseNames.length,
-      s"header declares ${parseNames.length} columns, data has ${inferred.length}")
+    require(inferred.isEmpty || inferred.length == parseNames.length, cfg.columnMethod match {
+      case ColumnMethod.Explicit =>
+        s"useColumns declares ${parseNames.length} positions, file has ${inferred.length} columns"
+      case ColumnMethod.PickFromFile =>
+        s"header declares ${parseNames.length} columns, data has ${inferred.length}"
+    })
     parseNames.zip(inferred.fields.map(_.dataType)).toMap
   }
 

@@ -120,15 +120,27 @@ class BatchStreamEqualitySpec extends SparkSpec {
     assert(b.count() == 2)
   }
 
+  test("a typed column past the inference sample reads as its useColumns type") {
+    val n = PlaybackStream.InferSampleLines
+    val at = written("late_typed.csv",
+      (Seq("x,n") ++ (1 to n).map(i => s"$i,$i") :+ "2.5,3000000000").mkString("", "\n", "\n"))
+    val b = assertEqual(PlaybackConfig(columnMethod = ColumnMethod.Explicit,
+      useColumns = "x:float,n:int"), at, "eq_late_typed")
+    val last = b.filter(col("row_idx") === n).head()
+    assert(last.getDouble(0) == 2.5 && last.getLong(1) == 3000000000L)
+  }
+
   test("explicit with an empty useColumns fails on both paths") {
     val at = staged("typed.csv")
     assertBothReject(playing(PlaybackConfig(columnMethod = ColumnMethod.Explicit), at), at,
       "columnMethod=explicit needs a non-empty useColumns")
   }
 
-  test("pick_from_file with a header/data column-count mismatch fails on both paths") {
+  test("a header or useColumns whose column count differs from the data fails on both paths") {
     val at = written("mismatch.csv", "a,b\n1,2,3\n4,5,6\n")
     assertBothReject(playing(PlaybackConfig(), at), at, "header declares 2 columns, data has 3")
+    assertBothReject(playing(PlaybackConfig(columnMethod = ColumnMethod.Explicit,
+      useColumns = "a,b"), at), at, "useColumns declares 2 positions, file has 3 columns")
   }
 
   test("a value past the inference sample that does not parse fails on both paths") {

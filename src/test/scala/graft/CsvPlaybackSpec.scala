@@ -91,6 +91,15 @@ class CsvPlaybackSpec extends SparkSpec {
     java.nio.file.Files.delete(p)
   }
 
+  test("a header-only file reads as zero rows with the header's columns") {
+    val p = java.nio.file.Files.createTempFile("header_only", ".csv")
+    java.nio.file.Files.writeString(p, "a,b\n")
+    val df = CsvPlayback.readFile(spark, PlaybackConfig(), p.toString)
+    assert(df.columns.toSeq == Seq("a", "b", "_row_idx"))
+    assert(df.count() == 0)
+    java.nio.file.Files.delete(p)
+  }
+
   test("line endings: \\r\\n is stripped, a lone \\r stays inside its field") {
     val p = java.nio.file.Files.createTempFile("crlf", ".csv")
     java.nio.file.Files.writeString(p, "h1,h2\na\rb,1\n2,3\r\n")
