@@ -2,7 +2,7 @@ package graft
 
 /** Per-round benchmark main. Runs the headline queries (the
   * `bench = true` subset of the registry: heavy relational joins/aggs,
-  * dedup, ANN, text analysis) against `SPARK_GRAFT_SF_DIR`, plus the
+  * dedup, ANN, text analysis) against `Session.sfDir`, plus the
   * playback-throughput measurement, and prints ONE JSON line.
   *
   * Timing = full query execution to an action (`count`), after a single
@@ -11,7 +11,7 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Session.sfDir
     val spark = Session.local()
     // ERROR, not WARN: the repeat runs re-cache identical plans by
     // design (CacheManager dedups them), and the resulting WARN spam
@@ -311,8 +311,8 @@ object Bench {
     }.mkString("[", ",", "]")
     val priorJson = priorName.map(Json.str).getOrElse("null")
     // in-band scaling contract (r16): the knobs the harness actually
-    // honored, so the driver can confirm $SPARK_GRAFT_CPUS /
-    // $SPARK_GRAFT_SF_DIR reached the session without reading the code
+    // honored, so a reader of the line can confirm `Session.cpus` /
+    // `Session.sfDir` reached the session without reading the code
     // (graft.Session builds master local[cpus] + shuffle.partitions from
     // the same env var; flat low/high-core ratios at sf0.1 are fixed-
     // cost saturation, not an ignored knob — evidence/scaling_r16.json

@@ -399,7 +399,7 @@ object PlaybackBench {
       (1 to math.min(n, 3)).foreach(_ => println(hostSentinel().json))
       return
     }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val sfDir = Session.sfDir
     val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     val seconds = args.headOption.map(_.toInt).getOrElse(10)

@@ -16,6 +16,11 @@ object Session {
     case Some(n) => n.toInt
   }
 
+  /** `SPARK_GRAFT_SF_DIR`, the dataset every main reads; unset means
+    * sf0.01, the dataset of the oracle gate and the committed plan
+    * audit. */
+  lazy val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
   def local(cpus: Int = Session.cpus): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")

@@ -177,30 +177,32 @@ object PlaybackConfig {
     "postProcessMethod" -> cfg.postProcessMethod.key,
     "suffixName" -> cfg.suffixName)
 
+  /** Validated inverse of [[toOptions]]; an absent key takes the default. */
   def fromOptions(opts: Map[String, String]): PlaybackConfig = {
     val ci = opts.map { case (k, v) => k.toLowerCase -> v }
-    def s(k: String, dflt: String) = ci.getOrElse(k.toLowerCase, dflt)
+    val dflt = toOptions(PlaybackConfig())
+    def s(k: String) = ci.getOrElse(k.toLowerCase, dflt(k))
     PlaybackConfig(
-      assetName = s("assetName", "vibration"),
-      csvDirName = s("csvDirName", "FLEDGE_DATA"),
-      csvFileName = s("csvFileName", ""),
-      headerMethod = Enums.HeaderMethod.from(s("headerMethod", "do_not_skip")),
-      dataPointForCombine = s("dataPointForCombine", "metadata"),
-      noOfRows = s("noOfRows", "1").toInt,
-      variableCols = s("variableCols", "false").toBoolean,
-      columnMethod = Enums.ColumnMethod.from(s("columnMethod", "pick_from_file")),
-      autoGeneratePrefix = s("autoGeneratePrefix", "column"),
-      useColumns = s("useColumns", ""),
-      rowIndexForColumnNames = s("rowIndexForColumnNames", "0").toInt,
-      ingestMode = Enums.IngestMode.from(s("ingestMode", "burst")),
-      sampleRate = s("sampleRate", "8000").toInt,
-      burstInterval = s("burstInterval", "1000").toInt,
-      timestampStyle = Enums.TimestampStyle.from(s("timestampStyle", "current time")),
-      timestampCol = s("timestampCol", ""),
-      timestampFormat = s("timestampFormat", "%Y-%m-%d %H:%M:%S.%f%z"),
-      ignoreNaN = Enums.NaNPolicy.from(s("ignoreNaN", "ignore")),
-      postProcessMethod = Enums.PostProcess.from(s("postProcessMethod", "continue_playing")),
-      suffixName = s("suffixName", ".tmp")).validated
+      assetName = s("assetName"),
+      csvDirName = s("csvDirName"),
+      csvFileName = s("csvFileName"),
+      headerMethod = Enums.HeaderMethod.from(s("headerMethod")),
+      dataPointForCombine = s("dataPointForCombine"),
+      noOfRows = s("noOfRows").toInt,
+      variableCols = s("variableCols").toBoolean,
+      columnMethod = Enums.ColumnMethod.from(s("columnMethod")),
+      autoGeneratePrefix = s("autoGeneratePrefix"),
+      useColumns = s("useColumns"),
+      rowIndexForColumnNames = s("rowIndexForColumnNames").toInt,
+      ingestMode = Enums.IngestMode.from(s("ingestMode")),
+      sampleRate = s("sampleRate").toInt,
+      burstInterval = s("burstInterval").toInt,
+      timestampStyle = Enums.TimestampStyle.from(s("timestampStyle")),
+      timestampCol = s("timestampCol"),
+      timestampFormat = s("timestampFormat"),
+      ignoreNaN = Enums.NaNPolicy.from(s("ignoreNaN")),
+      postProcessMethod = Enums.PostProcess.from(s("postProcessMethod")),
+      suffixName = s("suffixName")).validated
   }
 
   /** `FLEDGE_DATA`-prefixed directory expansion (csvplayback.py:35-37,

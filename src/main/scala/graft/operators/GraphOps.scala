@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics for crawl curation — the domain-authority
@@ -29,6 +29,10 @@ import org.apache.spark.sql.functions._
   * be gated that tightly). */
 object GraphOps {
 
+  /** Every edge endpoint as `node`, one row per endpoint. */
+  private def endpoints(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+
   /** `edges`: two columns (src, dst), assumed DISTINCT pairs. Returns
     * (node, rank) after `iters` damped iterations from the uniform
     * start. Deterministic given the edge set (float sums commute to
@@ -36,62 +40,63 @@ object GraphOps {
   def pageRank(spark: SparkSession, edges: DataFrame, srcCol: String,
       dstCol: String, iters: Int, damping: Double): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val nodes = endpoints(e).distinct()
       .localCheckpoint(false) // lazy: the count below materializes it
     val n = nodes.count()
-    // materialized ONCE, with the out-degree already ATTACHED to each
-    // edge: the loop re-executes its plan every round, so an
-    // uncheckpointed degree table would re-aggregate the full edge set
-    // per iteration — and joining ranks ⋈ deg ⋈ edges inside the loop
-    // would pay an extra join + exchange per round. Pre-joining deg
-    // onto the edge list (one edge-sized column) leaves each iteration
-    // exactly one rank ⋈ edges join + one groupBy(dst) shuffle.
-    // All loop checkpoints are LAZY (eager = false, the Bpe.encode /
-    // c01 discipline): each still truncates lineage so plans stay
-    // linear, but an eager one scheduled a driver job per round BEFORE
-    // the caller's action started; lazy folds every round's
-    // materialization into that one action (`nodes` stays eager — its
-    // count() is needed now). Values unchanged: checkpoint placement
-    // never changes the arithmetic.
     val eDeg = e
       .join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .localCheckpoint(false)
-    // The loop plans in an isolated cloned session (r16): AQE OFF —
-    // each round's frames are node/edge-bounded with nothing for
-    // runtime re-optimization to improve, while AQE's stage
-    // materialization scheduled one submitMapStage job PER EXCHANGE
-    // PER ROUND when the caller's action finally computed the lazy
-    // chain (q68: 50 jobs for 10 rounds) — and a shuffle-partition
-    // count DERIVED from the measured node count (LoopSession.derivedPartitions:
-    // ~500k fixed-width rank rows per reduce partition, floor 1, cap =
-    // the caller's session setting), so partitioning stays scale-
-    // adaptive instead of inheriting a cluster-sized constant for a
-    // node-bounded frame. Values unchanged: AQE and partition counts
-    // never change arithmetic, and the result frame re-binds to the
-    // caller's session below.
+    dampedRank(spark, "pagerank", n, nodes.withColumn("r0", lit(1.0 / n)),
+      eDeg, col("r") / col("deg"), lit((1.0 - damping) / n), iters, damping)
+  }
+
+  /** The damped rank loop the three PageRanks share: `iters` rounds of
+    * r ← restart + d·(in-contributions) from r = r0. `base` is the node
+    * universe, (node, r0) plus any column `restart` reads; `edges` is
+    * (src, dst, …) with each source's out-degree or out-weight already
+    * joined on, and `contrib` is one edge's share of its source's `r`.
+    *
+    * Pre-joining the degree onto the edge list, materialized once,
+    * leaves each round exactly one rank ⋈ edges join + one groupBy(dst)
+    * shuffle: an uncheckpointed degree table would re-aggregate the
+    * full edge set per round, and ranks ⋈ deg ⋈ edges inside the loop
+    * would pay an extra join + exchange. All loop checkpoints are LAZY
+    * (the Bpe.encode / c01 discipline): each truncates lineage so plans
+    * stay linear, where an eager one scheduled a driver job per round
+    * before the caller's action started.
+    *
+    * The loop plans in an isolated cloned session (r16) with AQE OFF —
+    * each round's frames are node/edge-bounded with nothing to
+    * re-optimize, while AQE's stage materialization scheduled one
+    * submitMapStage job per exchange per round (q68: 50 jobs for 10
+    * rounds) — and a shuffle-partition count derived from the node
+    * count `n` (LoopSession.derivedPartitions), so partitioning scales
+    * with the graph instead of inheriting a cluster-sized constant.
+    * Checkpoints, AQE and partition counts never change the arithmetic;
+    * the result re-binds to the caller's session. */
+  private def dampedRank(spark: SparkSession, tag: String, n: Long,
+      base: DataFrame, edges: DataFrame, contrib: Column, restart: Column,
+      iters: Int, damping: Double): DataFrame = {
     val loop = LoopSession.nonAdaptive(spark, n)
-    val nodesL = LoopSession.rebind(nodes, loop)
-    val eDegL = LoopSession.rebind(eDeg, loop)
-    var ranks = nodesL.withColumn("r", lit(1.0 / n)).localCheckpoint(false)
+    val baseL = LoopSession.rebind(base, loop)
+    val edgesL = LoopSession.rebind(edges, loop)
+    var ranks = baseL.select(col("node"), col("r0").as("r")).localCheckpoint(false)
     var i = 0
     while (i < iters) {
       val contribs = ranks
-        .join(eDegL, ranks("node") === eDegL("src"))
-        .select(col("dst").as("node"), (col("r") / col("deg")).as("c"))
+        .join(edgesL, ranks("node") === edgesL("src"))
+        .select(col("dst").as("node"), contrib.as("c"))
         .groupBy("node")
         .agg(sum(col("c")).as("cin"))
-      ranks = IterTrace.record("pagerank", nodesL
+      ranks = IterTrace.record(tag, baseL
         .join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("cin"), lit(0.0))).as("r")))
+          (restart + lit(damping) * coalesce(col("cin"), lit(0.0))).as("r")))
         .localCheckpoint(false)
       i += 1
     }
     LoopSession.rebind(ranks, spark)
   }
-
 
   /** Personalized (topic-sensitive) PageRank: the restart mass goes to
     * a SEED set instead of uniformly everywhere — the crawl-
@@ -101,21 +106,19 @@ object GraphOps {
     * start r₀ = p; scores concentrate in the seeds' out-neighborhood
     * instead of spreading to every sink.
     *
-    * Same per-iteration shape and checkpoint discipline as
-    * [[pageRank]] (one fixed-width join + one groupBy(sum) shuffle per
-    * round); the seed-restart column rides the checkpointed node frame
-    * so no extra join enters the loop. The node universe is the edge
-    * set's nodes UNION the seeds, so a seed absent from the graph
-    * still holds its restart mass (and the restart normalizer is the
-    * caller's literal seed count, not a data-dependent one — callers
-    * gate on that stability). Precondition: `seeds` nonempty. */
+    * [[pageRank]]'s loop with the seeded restart; the seed-restart
+    * column rides the checkpointed node frame so no extra join enters
+    * the loop. The node universe is the edge set's nodes UNION the
+    * seeds, so a seed absent from the graph still holds its restart
+    * mass (and the restart normalizer is the caller's literal seed
+    * count, not a data-dependent one — callers gate on that
+    * stability). Precondition: `seeds` nonempty. */
   def personalizedPageRank(spark: SparkSession, edges: DataFrame,
       srcCol: String, dstCol: String, seeds: DataFrame, seedCol: String,
       iters: Int, damping: Double): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val sd = seeds.select(col(seedCol).as("node")).distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).union(sd).distinct()
+    val nodes = endpoints(e).union(sd).distinct()
     val nSeeds = sd.count()
     val base = nodes
       .join(sd.withColumn("isSeed", lit(true)), Seq("node"), "left")
@@ -123,33 +126,14 @@ object GraphOps {
         when(col("isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0)).as("p0"))
       .localCheckpoint() // EAGER: base is re-read by round 1's two branches
       // concurrently (ranks0 chain + the densifying join) — see hits
-    val eDeg = e // deg pre-joined onto edges, once (see pageRank)
+    val eDeg = e
       .join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .localCheckpoint(false)
-    // isolated non-adaptive loop session with derived partitions (see
-    // pageRank's note); the node count is a block scan over the
-    // already-eager base checkpoint, not a recompute
-    val loop = LoopSession.nonAdaptive(spark, base.count())
-    val baseL = LoopSession.rebind(base, loop)
-    val eDegL = LoopSession.rebind(eDeg, loop)
-    var ranks = baseL.select(col("node"), col("p0").as("r"))
-      .localCheckpoint(false)
-    var i = 0
-    while (i < iters) {
-      val contribs = ranks
-        .join(eDegL, ranks("node") === eDegL("src"))
-        .select(col("dst").as("node"), (col("r") / col("deg")).as("c"))
-        .groupBy("node")
-        .agg(sum(col("c")).as("cin"))
-      ranks = IterTrace.record("seeded_pagerank", baseL
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("p0") +
-            lit(damping) * coalesce(col("cin"), lit(0.0))).as("r")))
-        .localCheckpoint(false)
-      i += 1
-    }
-    LoopSession.rebind(ranks, spark)
+    // the node count is a block scan over the already-eager base
+    // checkpoint, not a recompute
+    dampedRank(spark, "seeded_pagerank", base.count(),
+      base.withColumn("r0", col("p0")), eDeg, col("r") / col("deg"),
+      lit(1.0 - damping) * col("p0"), iters, damping)
   }
 
   /** Co-citation related-pair mining: two pages are related when many
@@ -190,46 +174,24 @@ object GraphOps {
   /** Weighted PageRank: edges carry a weight column and each node
     * splits its rank proportionally — r(u)·w(u→v)/W(u) with W(u) the
     * out-weight sum — the form real crawl graphs use (an edge backed
-    * by 500 links asserts more than one backed by 1). Same
-    * one-shuffle-per-iteration shape and checkpoint discipline as
-    * [[pageRank]]; the only change is the out-DEGREE table becoming
-    * an out-WEIGHT table and the join carrying w. Weights must be
-    * positive; rank conservation follows from Σ w/W = 1 per source. */
+    * by 500 links asserts more than one backed by 1). [[pageRank]]'s
+    * loop with an out-WEIGHT table in place of the out-DEGREE table and
+    * the join carrying w. Weights must be positive; rank conservation
+    * follows from Σ w/W = 1 per source. */
   def pageRankWeighted(spark: SparkSession, edges: DataFrame,
       srcCol: String, dstCol: String, weightCol: String, iters: Int,
       damping: Double): DataFrame = {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(weightCol).cast("double").as("w"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val nodes = endpoints(e).distinct()
       .localCheckpoint(false) // lazy: the count below materializes it
     val n = nodes.count()
-    val eW = e // out-weight sum pre-joined onto edges, once (see pageRank)
+    val eW = e
       .join(e.groupBy("src").agg(sum(col("w")).as("wtot")), "src")
-      .localCheckpoint(false) // lazy, as pageRank
-    // isolated non-adaptive loop session with derived partitions — see
-    // pageRank's note
-    val loop = LoopSession.nonAdaptive(spark, n)
-    val nodesL = LoopSession.rebind(nodes, loop)
-    val eWL = LoopSession.rebind(eW, loop)
-    var ranks = nodesL.withColumn("r", lit(1.0 / n)).localCheckpoint(false)
-    var i = 0
-    while (i < iters) {
-      val contribs = ranks
-        .join(eWL, ranks("node") === eWL("src"))
-        .select(col("dst").as("node"),
-          (col("r") * col("w") / col("wtot")).as("c"))
-        .groupBy("node")
-        .agg(sum(col("c")).as("cin"))
-      ranks = IterTrace.record("weighted_pagerank", nodesL
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("cin"), lit(0.0))).as("r")))
-        .localCheckpoint(false)
-      i += 1
-    }
-    LoopSession.rebind(ranks, spark)
+      .localCheckpoint(false)
+    dampedRank(spark, "weighted_pagerank", n, nodes.withColumn("r0", lit(1.0 / n)),
+      eW, col("r") * col("w") / col("wtot"), lit((1.0 - damping) / n), iters,
+      damping)
   }
 
   /** Bounded-round k-core peel of the UNDIRECTED simple graph
@@ -242,7 +204,7 @@ object GraphOps {
     * Each round is one semi-join pass (edges restricted to the alive
     * set on both endpoints — fixed-width keys) + one degree
     * aggregate; the alive frame localCheckpoints per round
-    * ([[pageRank]]'s discipline). The round count is a bounded unroll
+    * (`dampedRank`'s discipline). The round count is a bounded unroll
     * that EXITS at the provable fixpoint: each round's alive set is a
     * SUBSET of the previous one (survivors are endpoints of edges
     * within the previous alive set), so an unchanged COUNT means an
@@ -266,7 +228,7 @@ object GraphOps {
       .localCheckpoint(false)
     var aliveCount = alive.count()
     // isolated non-adaptive loop session with derived partitions (see
-    // pageRank's note): each round is two node-keyed semi-joins + one
+    // dampedRank's note): each round is two node-keyed semi-joins + one
     // degree aggregate over frames bounded by the shrinking alive set
     val loop = LoopSession.nonAdaptive(spark, aliveCount)
     val undL = LoopSession.rebind(und, loop)
@@ -311,7 +273,7 @@ object GraphOps {
     * negligible for any real out-degree — where a single byte would
     * over-weight low ranks by up to 1/256 whenever outdeg ∤ 256. Each step is two fixed-width equi-joins
     * (degree, then ranked edge) on the frontier only; frontier frames
-    * localCheckpoint per step ([[pageRank]]'s discipline). Returns
+    * localCheckpoint per step (`dampedRank`'s discipline). Returns
     * (start, step, node) rows, step 0 = the start itself. */
   def deterministicWalks(spark: SparkSession, edges: DataFrame,
       srcCol: String, dstCol: String, steps: Int): DataFrame = {
@@ -321,11 +283,10 @@ object GraphOps {
     val ranked = e
       .withColumn("rn",
         row_number().over(Window.partitionBy("src").orderBy("dst")) - 1)
-      .localCheckpoint(false) // lazy (pageRank's discipline)
+      .localCheckpoint(false) // lazy (dampedRank's discipline)
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val nodes = endpoints(e).distinct()
     var frontier = nodes
       .select(col("node").as("start"), col("node").as("cur"))
       .localCheckpoint(false)
@@ -404,11 +365,10 @@ object GraphOps {
     // (each round's frame has exactly ONE consumer, the next round's
     // chain, so laziness folds their materialization into the final
     // round's two jobs instead of scheduling one job per round).
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val nodes = endpoints(e).distinct()
       .localCheckpoint()
     // isolated non-adaptive loop session with derived partitions (see
-    // pageRank's note); the node count is a block scan over the
+    // dampedRank's note); the node count is a block scan over the
     // already-eager nodes checkpoint. The two final EAGER checkpoints
     // below then compute the whole lazy chain as two plain jobs
     // instead of one AQE stage-materialization job per exchange per
@@ -478,8 +438,7 @@ object GraphOps {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .localCheckpoint() // EAGER: six metric branches read it CONCURRENTLY
       // in one action — lazy would race-compute it per branch (see hits)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
+    val nodes = endpoints(e).distinct()
     val outHist = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .groupBy(col("deg")).agg(count(lit(1)).as("n"))
       .select(lit("out_deg").as("metric"), col("deg").as("k"), col("n"))

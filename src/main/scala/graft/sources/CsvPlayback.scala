@@ -3,7 +3,7 @@ package graft.sources
 import graft.config.Enums._
 import graft.config.PlaybackConfig
 import graft.streaming.{CsvPlaybackStream, PlaybackStream}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch read of one CSV file into the post-transform DataFrame
@@ -58,14 +58,17 @@ object CsvPlayback {
   * violation if it is null (missing field) or a whitespace-only
   * non-empty string. */
 object NaNReport {
+
+  /** True where column `c` holds a violation. */
+  def missing(c: String): Column = {
+    val s = col(c).cast("string")
+    col(c).isNull || (length(s) > 0 && trim(s) === "")
+  }
+
   def violations(df: DataFrame): Map[String, Long] = {
     val cols = df.columns.filter(_ != CsvPlayback.RowIdx)
     if (cols.isEmpty) return Map.empty
-    val aggs = cols.map { c =>
-      val s = col(c).cast("string")
-      sum(when(col(c).isNull || (length(s) > 0 && trim(s) === ""), 1L)
-        .otherwise(0L)).as(c)
-    }
+    val aggs = cols.map(c => sum(when(missing(c), 1L).otherwise(0L)).as(c))
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     cols.zipWithIndex.map { case (c, i) =>
       c -> (if (row.isNullAt(i)) 0L else row.getLong(i))

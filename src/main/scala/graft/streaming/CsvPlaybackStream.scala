@@ -214,13 +214,14 @@ object CsvPlaybackStream {
     parts.toArray
   }
 
+  /** Lines the header method skips before the column names or data. */
+  def headerSkip(cfg: PlaybackConfig): Int =
+    if (cfg.headerMethod == HeaderMethod.DoNotSkip) 0 else cfg.noOfRows
+
   /** First physical data line of the file for a config (header lines
     * consumed before data starts, csvplayback.py:579-659). */
   def dataStartLine(cfg: PlaybackConfig): Int = {
-    val skip = cfg.headerMethod match {
-      case HeaderMethod.SkipRows | HeaderMethod.PassInDatapoint => cfg.noOfRows
-      case HeaderMethod.DoNotSkip => 0
-    }
+    val skip = headerSkip(cfg)
     if (cfg.variableCols) skip
     else cfg.columnMethod match {
       case ColumnMethod.Explicit => skip + 1 // pandas header=0 consumes one line

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.config.PlaybackConfig
-import graft.operators.TimestampStyles
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.config.Enums._
 import graft.config.PlaybackConfig
 import graft.functions.CsvLine
-import graft.timefmt.Strftime
+import graft.operators.TimestampStyles
+import graft.sources.{CsvPlayback, NaNReport}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -42,11 +43,7 @@ object PlaybackStream {
       case ColumnMethod.Explicit =>
         cfg.parsedUseColumns.names
       case ColumnMethod.PickFromFile =>
-        val skip = cfg.headerMethod match {
-          case HeaderMethod.SkipRows | HeaderMethod.PassInDatapoint => cfg.noOfRows
-          case HeaderMethod.DoNotSkip => 0
-        }
-        val headerIdx = skip + cfg.rowIndexForColumnNames
+        val headerIdx = CsvPlaybackStream.headerSkip(cfg) + cfg.rowIndexForColumnNames
         PlaybackIO.headLines(path, headerIdx + 1).last.split(",", -1).toSeq
     }
   }
@@ -138,12 +135,10 @@ object PlaybackStream {
     val internal = Set("row_idx", "pos_in_batch", "emit_ts")
     val checked = df.columns.map { c =>
       if (internal(c)) col(c)
-      else {
-        val s = col(c).cast("string")
-        when(col(c).isNull || (length(s) > 0 && trim(s) === ""),
+      else
+        when(NaNReport.missing(c),
           raise_error(lit(s"There are NaN / missing values in the CSV file: $c")))
           .otherwise(col(c)).as(c)
-      }
     }
     df.select(checked.toIndexedSeq: _*)
   }
@@ -204,32 +199,22 @@ object PlaybackStream {
       }
     case TimestampStyle.CopyCsvValue =>
       df.withColumn("timestamp",
-        to_timestamp(col(cfg.timestampCol).cast("string"), Strftime.toJava(cfg.timestampFormat)))
+        to_timestamp(col(cfg.timestampCol).cast("string"), cfg.javaTimestampFormat))
     case TimestampStyle.MoveCsvValue =>
       df.withColumn("timestamp",
-          to_timestamp(col(cfg.timestampCol).cast("string"), Strftime.toJava(cfg.timestampFormat)))
+          to_timestamp(col(cfg.timestampCol).cast("string"), cfg.javaTimestampFormat))
         .drop(cfg.timestampCol)
     case TimestampStyle.UseCsvSampleDelta =>
       // T5: delta from the file's first two rows, once, driver-side
-      // (csvplayback.py:726-736); start = stream build wall-clock;
-      // row_idx is monotone across replays so timestamps never repeat
-      val fmt = Strftime.toJava(cfg.timestampFormat)
+      // (csvplayback.py:726-736), through the stream's own parse and the
+      // batch delta; start = stream build wall-clock; row_idx is
+      // monotone across replays so timestamps never repeat
+      import spark.implicits._
       val dataStart = CsvPlaybackStream.dataStartLine(cfg)
-      val head = PlaybackIO.headLines(file, dataStart + 2).takeRight(2)
-      require(head.length == 2, "use csv sample delta needs at least 2 data rows")
-      val tsIdx = {
-        val names = resolveColumns(spark, cfg, file)
-        val i = names.indexOf(cfg.timestampCol)
-        require(i >= 0, s"timestampCol '${cfg.timestampCol}' not in $names")
-        i
-      }
-      val fmtJ = java.time.format.DateTimeFormatter.ofPattern(fmt)
-      def parse(lineIdx: Int): Long = {
-        val v = head(lineIdx).split(",", -1)(tsIdx)
-        val t = java.time.OffsetDateTime.parse(v, fmtJ)
-        t.toInstant.getEpochSecond * 1000000L + t.getNano / 1000L
-      }
-      val delta = parse(1) - parse(0)
+      val head = PlaybackIO.headLines(file, dataStart + 2).drop(dataStart)
+        .zip(Seq(0L, 1L)).toDF("value", CsvPlayback.RowIdx)
+      val delta = TimestampStyles.sampleDeltaMicros(parse(spark, cfg, file, head),
+        cfg.timestampCol, cfg.timestampFormat)
       val start = System.currentTimeMillis() * 1000L
       df.withColumn("timestamp", timestamp_micros(lit(start) + col("row_idx") * lit(delta)))
   }

@@ -6,9 +6,13 @@ import graft.QueryRegistry
   * physical plan — parquet pushed filters, read schema width, join
   * strategies, exchange count, whole-stage codegen coverage. The
   * things that must look right before believing a plan scales to
-  * 100 TB.
+  * 100 TB. The first output line names the cores and the dataset.
   */
 object ExplainAudit {
+
+  /** Exchange and codegen counts follow the partition count, so the
+    * audit always runs at the test suite's core count. */
+  val Cores = 4
 
   import org.apache.spark.sql.execution.SparkPlan
 
@@ -157,8 +161,9 @@ object ExplainAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.Session.local()
+    val sfDir = graft.Session.sfDir
+    val spark = graft.Session.local(cpus = Cores)
+    println(s"# explain_audit cores=$Cores sf_dir=$sfDir")
     spark.sparkContext.setLogLevel("ERROR")
     val only = args.headOption
     // capture one representative PRE-checkpoint round body per

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
 object GraphSkewBench {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.Session.sfDir
     val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -13,7 +13,7 @@ import org.apache.spark.scheduler._
   * bench only confirming direction. */
 object JobStats {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.Session.sfDir
     val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     graft.Tables.names.foreach(n => graft.Tables(spark, sfDir, n).count())

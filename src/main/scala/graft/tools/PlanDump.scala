@@ -18,7 +18,7 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.Session.sfDir
     val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

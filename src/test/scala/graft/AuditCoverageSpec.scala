@@ -24,12 +24,13 @@ class AuditCoverageSpec extends AnyFunSuite {
       .ListHasAsScala(java.nio.file.Files.readAllLines(auditPath)).asScala.toSeq
   }
 
-  // audit rows start with the query name in column 0; diagnostic lines
-  // (NLJ_VIOLATION, waived-window notes) are indented; `iter:`-prefixed
-  // rows are the ITERATION-BODY audits (one per iterative operator's
-  // round body — see operators.IterTrace), checked separately below
+  // audit rows start with the query name in column 0; the `#` header
+  // names the cores and dataset; diagnostic lines (NLJ_VIOLATION,
+  // waived-window notes) are indented; `iter:`-prefixed rows are the
+  // ITERATION-BODY audits (one per iterative operator's round body —
+  // see operators.IterTrace), checked separately below
   private lazy val allRows: Map[String, String] = lines
-    .filter(l => l.nonEmpty && !l.startsWith(" "))
+    .filter(l => l.nonEmpty && !l.startsWith(" ") && !l.startsWith("#"))
     .map(l => l.split("\\s+", 2) match {
       case Array(name, rest) => name.stripSuffix(":") -> rest
       case Array(name) => name.stripSuffix(":") -> ""
@@ -40,6 +41,16 @@ class AuditCoverageSpec extends AnyFunSuite {
 
   private lazy val iterAudited: Map[String, String] = allRows.collect {
     case (k, v) if k.startsWith("iter:") => k.stripPrefix("iter:") -> v }
+
+  test("plan audit header pins the core count ExplainAudit runs at") {
+    // exchange and codegen counts move with the shuffle-partition
+    // count, so rows generated at another core count are not comparable
+    val cores = "^# explain_audit cores=(\\d+) ".r
+      .findFirstMatchIn(lines.headOption.getOrElse("")).map(_.group(1).toInt)
+    assert(cores.contains(graft.tools.ExplainAudit.Cores),
+      s"audit header ${lines.headOption.getOrElse("<empty>")} must read " +
+        s"cores=${graft.tools.ExplainAudit.Cores} (regenerate the audit)")
+  }
 
   test("plan audit covers exactly the registry at HEAD") {
     val registry = QueryRegistry.all.map(_.name).toSet

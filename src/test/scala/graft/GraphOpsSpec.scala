@@ -133,6 +133,17 @@ class GraphOpsSpec extends SparkSpec {
     }
     assert(got(5L) == 0.0 && got(6L) == 0.0)          // no restart, unreachable
     assert(math.abs(got(9L) - 0.15 * 0.5) < 1e-12)    // isolated seed keeps (1-d)*p0
+
+    // every node a seed: the restart is uniform, so this is pageRank
+    val all = GraphOps.personalizedPageRank(spark, es.toDF("src", "dst"),
+        "src", "dst", Seq(0L, 1L, 2L, 5L, 6L).toDF("node"), "node", 12, 0.85)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val uniform = GraphOps.pageRank(spark, es.toDF("src", "dst"), "src", "dst", 12, 0.85)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(all.keySet == uniform.keySet)
+    uniform.foreach { case (v, pr) =>
+      assert(math.abs(all(v) - pr) < 1e-12, s"node $v: seeded ${all(v)} vs uniform $pr")
+    }
   }
 
   test("coCitationPairs counts distinct co-linking sources; hub cap drops directory noise") {

@@ -12,6 +12,26 @@ class PlaybackConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
       c.timestampFormat == "%Y-%m-%d %H:%M:%S.%f%z")
   }
 
+  test("fromOptions takes the case-class defaults and inverts toOptions") {
+    assert(PlaybackConfig.fromOptions(Map.empty) == PlaybackConfig())
+    val c = PlaybackConfig(assetName = "pump", csvDirName = "/data/in",
+      csvFileName = "pump", headerMethod = HeaderMethod.SkipRows,
+      dataPointForCombine = "meta", noOfRows = 3, variableCols = true,
+      columnMethod = ColumnMethod.Explicit, autoGeneratePrefix = "col",
+      useColumns = "a:float,b:int", rowIndexForColumnNames = 2,
+      ingestMode = IngestMode.Continuous, sampleRate = 100, burstInterval = 500,
+      timestampStyle = TimestampStyle.MoveCsvValue, timestampCol = "ts",
+      timestampFormat = "%Y-%m-%d %H:%M:%S", ignoreNaN = NaNPolicy.Report,
+      postProcessMethod = PostProcess.Rename, suffixName = ".done")
+    val differs = c.productIterator.zip(PlaybackConfig().productIterator)
+      .map { case (a, b) => a != b }.toSeq
+    assert(differs.length == 20 && differs.forall(identity),
+      "every field of the round-tripped config is non-default")
+    assert(PlaybackConfig.fromOptions(PlaybackConfig.toOptions(c)) == c)
+    // keys are case-insensitive, as DataSourceV2 options are
+    assert(PlaybackConfig.fromOptions(Map("SAMPLERATE" -> "7")).sampleRate == 7)
+  }
+
   test("chunk derivation: burst = sampleRate*interval/1000 (csvplayback.py:296-301)") {
     val c = PlaybackConfig()
     assert(c.chunkSize == 8000 && c.periodSec == 1.0)

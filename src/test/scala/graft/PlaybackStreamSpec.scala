@@ -422,20 +422,30 @@ class PlaybackStreamSpec extends SparkSpec {
   }
 
   test("T5 sample-delta timestamps are monotone on the stream") {
-    val dir = stage("vibration.csv")
-    val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = "vibration",
-      ingestMode = IngestMode.Continuous, sampleRate = 2,
-      timestampStyle = TimestampStyle.UseCsvSampleDelta,
-      timestampCol = "user_ts", postProcessMethod = PostProcess.ContinuePlaying)
-    runStream(cfg, "delta", () => count("delta") >= 6)
-    val ts = spark.sql("SELECT row_idx, timestamp FROM delta ORDER BY row_idx")
-      .collect().map(_.getTimestamp(1).getTime * 1000)
-    // 125µs delta: consecutive stamps differ by exactly 125µs → ms-level:
-    // every 8th stamp advances 1ms; just assert strict monotonicity in µs
-    val tsMicros = spark.sql("SELECT row_idx, unix_micros(timestamp) FROM delta ORDER BY row_idx")
-      .collect().map(_.getLong(1))
-    assert(tsMicros.sliding(2).forall(p => p(1) - p(0) == 125L),
-      s"uniform 125µs spacing across replays: ${tsMicros.take(8).toSeq}")
+    // the delta comes from the file's first two data rows as the stream
+    // parses them: an offset-free format and a quoted first field whose
+    // JSON holds commas read the same 125µs as the plain fixture
+    val zoneless = Files.createTempDirectory("playback")
+    Files.write(zoneless.resolve("zoneless.csv"), ("channel1,user_ts\n" +
+      (0 until 3).map(i => f"0.5,2019-12-12 10:00:00.${i * 125}%06d\n").mkString)
+      .getBytes("UTF-8"))
+    Seq(
+      ("delta", stage("vibration.csv"), "vibration", "%Y-%m-%d %H:%M:%S.%f%z"),
+      ("delta_zoneless", zoneless, "zoneless", "%Y-%m-%d %H:%M:%S.%f"),
+      ("delta_quoted", stage("raw_fledge_export.csv"), "raw_fledge_export",
+        "%Y-%m-%d %H:%M:%S.%f%z")).foreach { case (name, dir, file, fmt) =>
+      val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = file,
+        ingestMode = IngestMode.Continuous, sampleRate = 2,
+        timestampStyle = TimestampStyle.UseCsvSampleDelta,
+        timestampCol = "user_ts", timestampFormat = fmt,
+        postProcessMethod = PostProcess.ContinuePlaying)
+      runStream(cfg, name, () => count(name) >= 6)
+      // consecutive stamps differ by exactly the file's 125µs, across replays
+      val tsMicros = spark.sql(s"SELECT unix_micros(timestamp) FROM $name ORDER BY row_idx")
+        .collect().map(_.getLong(0))
+      assert(tsMicros.sliding(2).forall(p => p(1) - p(0) == 125L),
+        s"$file: uniform 125µs spacing across replays: ${tsMicros.take(8).toSeq}")
+    }
   }
 
   test("recovered anchor rejects a same-named file with different bytes") {
