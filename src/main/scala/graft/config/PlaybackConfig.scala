@@ -147,8 +147,6 @@ final case class PlaybackConfig(
 
   def parsedUseColumns: graft.schema.UseColumns.Spec =
     graft.schema.UseColumns.parse(useColumns)
-
-  def javaTimestampFormat: String = graft.timefmt.Strftime.toJava(timestampFormat)
 }
 
 object PlaybackConfig {

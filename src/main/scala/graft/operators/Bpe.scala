@@ -209,7 +209,7 @@ object Bpe {
     // grow, while the full explode stays O(all types · avg length)).
     // Small gated trains keep the classic recount; big production
     // vocabularies get the incremental table.
-    val incremental = numMerges > incrementalFrom
+    val incremental = runsIncremental(numMerges, incrementalFrom)
     var counts =
       if (incremental) pairFrame(states).localCheckpoint(false) else null
     val merges = Seq.newBuilder[(String, String, Long)]
@@ -238,11 +238,7 @@ object Bpe {
                 lit(1L).as("sg")))).as("x"))
             .select((col("freq") * col("x.sg")).as("w"), col("x.st").as("st")))
           .select(col("lhs"), col("rhs"), col("w").as("cnt"))
-        counts = IterTrace.record("bpe_pair_delta",
-          counts.unionByName(delta)
-            .groupBy(col("lhs"), col("rhs")).agg(sum(col("cnt")).as("cnt"))
-            .filter(col("cnt") > 0)) // a zeroed pair has no occurrences —
-          // exactly pairFrame's "no row", keeping the induction invariant
+        counts = IterTrace.record("bpe_pair_delta", carryCounts(counts, delta))
           .localCheckpoint(false) // lazy: the NEXT round's argmax collect
           // materializes it (one job per merge, the sequential floor)
       }
@@ -262,6 +258,24 @@ object Bpe {
     }
     Model(alphabet, merges.result())
   }
+
+  /** The threshold gate of [[train]]: the carried-pair-count loop runs
+    * only above `incrementalFrom` merges. */
+  private[graft] def runsIncremental(numMerges: Int, incrementalFrom: Int): Boolean =
+    numMerges > incrementalFrom
+
+  /** The carried (lhs, rhs, cnt) table plus a signed delta. A zeroed pair
+    * has no occurrences, exactly pairFrame's "no row", so it is dropped;
+    * a negative total means the delta was mis-scoped (the induction
+    * invariant broke), so it fails the round instead of being dropped
+    * with the zeros. */
+  private[graft] def carryCounts(counts: DataFrame, delta: DataFrame): DataFrame =
+    counts.unionByName(delta)
+      .groupBy(col("lhs"), col("rhs")).agg(sum(col("cnt")).as("cnt"))
+      .filter(when(col("cnt") < 0, raise_error(concat(
+          lit("BPE carried pair count went negative: ("), col("lhs"), lit(", "), col("rhs"),
+          lit(") = "), col("cnt").cast("string"))))
+        .otherwise(col("cnt")) > 0)
 
   /** Greedy BPE over an in-memory type table — the exact same total
     * order and leftmost-first application as [[train]] (BpeSpec pins

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.sources.CsvPlayback.RowIdx
-import graft.timefmt.Strftime
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.timefmt.{CsvTimestamp, Strftime}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.time.Instant
@@ -50,12 +50,25 @@ object TimestampStyles {
       timestamp_micros(baseSecondMicros + posInChunk * interval))
   }
 
+  /** The one parse of a CSV timestamp column (T3/T4 and the T5 delta,
+    * on the stream and the batch read alike): `to_timestamp` with the
+    * strftime format's Java pattern, behind the byte kernel
+    * ([[graft.timefmt.CsvTimestamp]]) where `spark`'s conf lets it give
+    * the same answer, so a kernel-read string skips java.time and any
+    * other string still gets Spark's own value, null or error. */
+  def csvTimestamp(spark: SparkSession, c: Column, strftimeFmt: String): Column = {
+    val text = c.cast("string")
+    val plain = to_timestamp(text, Strftime.toJava(strftimeFmt))
+    if (CsvTimestamp.applies(spark, strftimeFmt))
+      coalesce(CsvTimestamp.parse_csv_timestamp(text, strftimeFmt), plain)
+    else plain
+  }
+
   /** T3 — `copy csv value` (csvplayback.py:717-721): parse the CSV's
     * timestamp column with the configured strftime format; the column
     * stays in the readings. */
   def copyCsvValue(df: DataFrame, tsCol: String, strftimeFmt: String): DataFrame =
-    df.withColumn(TsCol, to_timestamp(col(tsCol).cast("string"),
-      Strftime.toJava(strftimeFmt)))
+    df.withColumn(TsCol, csvTimestamp(df.sparkSession, col(tsCol), strftimeFmt))
 
   /** T4 — `move csv value` (csvplayback.py:723-725): T3 + drop the
     * source column from the readings. */
@@ -79,9 +92,8 @@ object TimestampStyles {
     * (csvplayback.py:728-732) — a 2-row driver-side action, cached as a
     * literal in the plan (constant-folded by Catalyst). */
   def sampleDeltaMicros(df: DataFrame, tsCol: String, strftimeFmt: String): Long = {
-    val fmt = Strftime.toJava(strftimeFmt)
     val two = df.orderBy(col(RowIdx))
-      .select(unix_micros(to_timestamp(col(tsCol).cast("string"), fmt)))
+      .select(unix_micros(csvTimestamp(df.sparkSession, col(tsCol), strftimeFmt)))
       .limit(2).collect()
     require(two.length == 2, "use csv sample delta needs at least 2 rows")
     two(1).getLong(0) - two(0).getLong(0)

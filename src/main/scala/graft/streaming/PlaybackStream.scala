@@ -198,12 +198,9 @@ object PlaybackStream {
               col("pos_in_batch") * interval))
       }
     case TimestampStyle.CopyCsvValue =>
-      df.withColumn("timestamp",
-        to_timestamp(col(cfg.timestampCol).cast("string"), cfg.javaTimestampFormat))
+      TimestampStyles.copyCsvValue(df, cfg.timestampCol, cfg.timestampFormat)
     case TimestampStyle.MoveCsvValue =>
-      df.withColumn("timestamp",
-          to_timestamp(col(cfg.timestampCol).cast("string"), cfg.javaTimestampFormat))
-        .drop(cfg.timestampCol)
+      TimestampStyles.moveCsvValue(df, cfg.timestampCol, cfg.timestampFormat)
     case TimestampStyle.UseCsvSampleDelta =>
       // T5: delta from the file's first two rows, once, driver-side
       // (csvplayback.py:726-736), through the stream's own parse and the

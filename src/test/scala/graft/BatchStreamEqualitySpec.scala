@@ -2,6 +2,7 @@ package graft
 
 import graft.config.{Enums, PlaybackConfig}
 import Enums._
+import graft.operators.TimestampStyles
 import graft.sources.CsvPlayback
 import graft.streaming.{CsvPlaybackStream, PlaybackStream}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -43,8 +44,9 @@ class BatchStreamEqualitySpec extends SparkSpec {
   private def file(at: (Path, String)): String = at._1.resolve(at._2).toString
 
   /** Rows [0, fileRows) of the stream, collected once a later row shows
-    * that the first pass is complete. */
-  private def firstPass(cfg: PlaybackConfig, at: (Path, String), name: String): DataFrame = {
+    * that the first pass is complete, without the `dropped` columns. */
+  private def firstPass(cfg: PlaybackConfig, at: (Path, String), name: String,
+      dropped: Seq[String] = streamOnly): DataFrame = {
     val idx = CsvPlaybackStream.buildLineIndex(spark.sparkContext, file(at))
     val fileRows = idx.totalLines - CsvPlaybackStream.dataStartLine(cfg)
     val q = PlaybackStream.readings(spark, cfg)
@@ -56,7 +58,7 @@ class BatchStreamEqualitySpec extends SparkSpec {
       while (played < fileRows && System.currentTimeMillis() < deadline) Thread.sleep(50)
       assert(played >= fileRows, s"stream did not finish one pass of $fileRows rows")
     } finally q.stop()
-    spark.table(name).filter(col("row_idx") < fileRows).drop(streamOnly: _*)
+    spark.table(name).filter(col("row_idx") < fileRows).drop(dropped: _*)
   }
 
   private def sorted(df: DataFrame): Seq[Row] =
@@ -128,6 +130,33 @@ class BatchStreamEqualitySpec extends SparkSpec {
       useColumns = "x:float,n:int"), at, "eq_late_typed")
     val last = b.filter(col("row_idx") === n).head()
     assert(last.getDouble(0) == 2.5 && last.getLong(1) == 3000000000L)
+  }
+
+  test("copy csv value: byte-kernel rows and to_timestamp fallback rows agree on both paths") {
+    // a .5 fraction and Feb 30 take the fallback; Feb 30 is null with ANSI off
+    val at = written("copied.csv", Seq("user_ts,v",
+      "2019-12-12 10:00:00.000125+0000,1",
+      "2019-12-12 10:00:00.5+0000,2",
+      "2019-02-30 10:00:00.000000+0000,3",
+      "2019-12-12 15:30:00.000250+0530,4").mkString("", "\n", "\n"))
+    val cfg = playing(PlaybackConfig(timestampStyle = TimestampStyle.CopyCsvValue,
+      timestampCol = "user_ts"), at)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val batch = TimestampStyles.copyCsvValue(CsvPlayback.readFile(spark, cfg, file(at)),
+          cfg.timestampCol, cfg.timestampFormat)
+        .withColumnRenamed(CsvPlayback.RowIdx, "row_idx")
+      val stream = firstPass(cfg, at, "eq_copied", dropped = Seq("pos_in_batch", "emit_ts"))
+      val cols = batch.columns.map(col).toIndexedSeq
+      val inOrder = (df: DataFrame) => df.select(cols: _*).orderBy("row_idx").collect().toSeq
+      val rows = inOrder(batch)
+      assert(rows == inOrder(stream))
+      assert(batch.schema.map(_.dataType) == stream.select(cols: _*).schema.map(_.dataType))
+      assert(rows.map(r => Option(r.getTimestamp(r.fieldIndex("timestamp"))).map(_.toInstant.toString)) ==
+        Seq(Some("2019-12-12T10:00:00.000125Z"), Some("2019-12-12T10:00:00.500Z"), None,
+          Some("2019-12-12T10:00:00.000250Z")))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("explicit with an empty useColumns fails on both paths") {

@@ -51,6 +51,32 @@ class BpeSpec extends SparkSpec {
       "carried-pair-count loop must pick the identical merge sequence")
   }
 
+  test("the production threshold gate straddled at a small bound: 10 merges at incrementalFrom = 8") {
+    val docs = TestSpark.spark.read
+      .parquet("/root/testdata/sf0.001/documents.parquet")
+    // the gate `train` runs: 10 merges above a bound of 8 take the
+    // carried counts; 8 merges at that bound, and 10 under the default
+    // one, take the classic recount
+    assert(Bpe.runsIncremental(10, 8) && !Bpe.runsIncremental(8, 8))
+    assert(!Bpe.runsIncremental(10, Bpe.IncrementalFrom))
+    val classic = Bpe.train(spark, docs, "text", 10)
+    assert(Bpe.train(spark, docs, "text", 10, incrementalFrom = 8) == classic)
+    assert(Bpe.train(spark, docs, "text", 8, incrementalFrom = 8).merges == classic.merges.take(8))
+  }
+
+  test("the carried pair table drops zeroed pairs and fails on a negative count") {
+    import spark.implicits._
+    val counts = Seq(("a", "b", 2L), ("b", "c", 1L)).toDF("lhs", "rhs", "cnt")
+    val zeroing = Seq(("b", "c", -1L), ("c", "d", 4L)).toDF("lhs", "rhs", "cnt")
+    assert(Bpe.carryCounts(counts, zeroing).orderBy("lhs").as[(String, String, Long)]
+      .collect().toSeq == Seq(("a", "b", 2L), ("c", "d", 4L)))
+    val negative = Seq(("a", "b", -3L)).toDF("lhs", "rhs", "cnt")
+    val e = intercept[Exception](Bpe.carryCounts(counts, negative).collect())
+    def messages(t: Throwable): String =
+      if (t == null) "" else s"${t.getMessage} ${messages(t.getCause)}"
+    assert(messages(e).contains("BPE carried pair count went negative: (a, b) = -1"), messages(e))
+  }
+
   test("encode chain equals the trained segmentation for every training word") {
     import spark.implicits._
     // the single-application fixpoint argument, checked empirically:
