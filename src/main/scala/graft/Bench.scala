@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
 /** Per-round benchmark main. Runs the headline queries (the
   * `bench = true` subset of the registry: heavy relational joins/aggs,
   * dedup, ANN, text analysis) against `Session.sfDir`, plus the
@@ -153,43 +156,26 @@ object Bench {
     * where round N's artifacts are committed only after round N's
     * bench ran. Absent/unparseable → empty map, no annotation. */
   def loadPriorBench(): (Option[String], Map[String, Double]) = {
-    val path = sys.env.get("GRAFT_PRIOR_BENCH")
-      .filter(_.trim.toLowerCase != "none")
-      .orElse {
-        if (sys.env.get("GRAFT_PRIOR_BENCH").exists(
-            _.trim.toLowerCase == "none")) None
-        else Option(new java.io.File(".").listFiles())
-          .getOrElse(Array.empty)
-          .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-          .sortBy(_.getName.replaceAll("\\D", "").toInt)
-          .lastOption.map(_.getPath)
-      }
-    path.flatMap { p =>
-      try Some(p -> parsePriorQueries(
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)))))
-      catch { case _: Throwable => None }
-    } match {
-      case Some((p, m)) => (Some(p), m)
-      case None => (None, Map.empty)
+    val path = sys.env.get("GRAFT_PRIOR_BENCH") match {
+      case Some(p) => Some(p).filter(_.trim.toLowerCase != "none")
+      case None => Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+        .sortBy(_.getName.replaceAll("\\D", "").toInt).lastOption.map(_.getPath)
     }
+    path.flatMap(p => scala.util.Try(parsePriorQueries(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(p)))).toOption.map(m => (Some(p), m)))
+      .getOrElse((None, Map.empty))
   }
 
-  /** Minimal extraction of `"queries":{"name":sec,...}` from a prior
-    * bench JSON line (no JSON lib in the runtime classpath — the shape
-    * is this main's own output). */
+  /** The per-query seconds of a prior bench JSON: `parsed.queries` of
+    * a driver-wrapped `BENCH_r*.json`, else the top-level `queries` of
+    * this main's own line. */
   def parsePriorQueries(json: String): Map[String, Double] = {
-    val m = java.util.regex.Pattern.compile("\"queries\":\\{(.*?)\\}")
-      .matcher(json)
-    if (!m.find()) Map.empty
-    else {
-      val pair = java.util.regex.Pattern
-        .compile("\"([A-Za-z0-9_]+)\":(-?[0-9.]+)")
-      val it = pair.matcher(m.group(1))
-      val out = Map.newBuilder[String, Double]
-      while (it.find()) out += (it.group(1) -> it.group(2).toDouble)
-      out.result()
-    }
+    val root = Json.mapper.readTree(json)
+    val qs = Option(root.path("parsed").get("queries")).getOrElse(root.path("queries"))
+    qs.properties.asScala.collect {
+      case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+    }.toMap
   }
 
   /** One query's bench outcome: best wall time over the sample rounds
@@ -257,47 +243,20 @@ object Bench {
       prior: Map[String, Double] = Map.empty,
       priorName: Option[String] = None,
       cpus: Option[Int] = None, master: String = ""): String = {
-    val qs = results.map { case (k, r) => "\"" + k + f"""":${r.sec}%.3f""" }
-      .mkString("{", ",", "}")
-    // warmup-pass walls: where one-time costs live (JIT, page cache,
-    // memoized model trains) — t39's 512-merge train wall is THIS
-    // map's entry, never the steady-state row
-    val wq = results.collect { case (k, r) if r.warmupSec >= 0 =>
-      "\"" + k + f"""":${r.warmupSec}%.3f""" }.mkString("{", ",", "}")
-    val memo = results.collect { case (k, _) if MemoizedBench(k) =>
-      "\"" + k + "\"" }.mkString("[", ",", "]")
-    val failed = results.collect { case (k, r) if r.failed => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
     val nFailed = results.count(_._2.failed)
     val total = results.collect { case (_, r) if !r.failed => r.sec }.sum
     // host-contention sentinel: absolute fixed-work probe seconds
     // (round-over-round comparable) + worst probe over the quiet
     // anchor. factor ~1 = clean window; >~2 = the playback numbers in
     // THIS json were measured under co-tenant contention.
-    val probeJson = probes.map(p => f"$p%.3f").mkString("[", ",", "]")
     val noise = if (probes.isEmpty) -1.0
       else probes.max / PlaybackBench.QuietProbeSec
     // parallelism sentinel: worst (max) scaling ratio over the
     // bracketing snapshots — ~1 = all cores effectively free; on a
     // 32-core host a value of R means only ~cores/R cores' worth of
     // CPU was available, and agg8 in THIS json is expected ~R× low.
-    val sentJson = sentinels.map(_.json).mkString("[", ",", "]")
     val worstScaling =
       if (sentinels.isEmpty) -1.0 else sentinels.map(_.scalingRatio).max
-    // phase-LOCAL contention: each headline number's own window,
-    // sampled concurrently while that phase ran (loadavg + low-duty
-    // probe) — the bracketing sentinels attribute the run, these
-    // attribute the number (r12 verdict: agg8 must carry its phase's
-    // reading)
-    val phaseJson = phases
-      .map { case (k, p) => "\"" + k + "\":" + p.json }
-      .mkString("{", ",", "}")
-    // per-QUERY contention: the samples taken while each bench entry
-    // was the one running (mark-at-start + periodic ticks), so a
-    // single-query outlier carries its own window's evidence
-    val qcJson = results.flatMap { case (k, _) =>
-      queryContention.get(k).map(p => "\"" + k + "\":" + p.json) }
-      .mkString("{", ",", "}")
     // in-band round-over-round annotation: every successful query
     // >1.3× its prior-round seconds, with ITS contention factor next
     // to the ratio — a regression under probe_factor ~1 is an engine
@@ -307,9 +266,10 @@ object Bench {
           p > 0 && r.sec / p > 1.3) =>
         val pf = queryContention.get(k).map(_.probeFactor).getOrElse(-1.0)
         val lm = queryContention.get(k).map(_.loadMean).getOrElse(-1.0)
-        f"""{"query":"$k","prev_sec":${prior(k)}%.3f,"sec":${r.sec}%.3f,"ratio":${r.sec / prior(k)}%.2f,"probe_factor":$pf%.2f,"loadavg_mean":$lm%.2f}"""
-    }.mkString("[", ",", "]")
-    val priorJson = priorName.map(Json.str).getOrElse("null")
+        ListMap("query" -> k, "prev_sec" -> Json.fixed(prior(k), 3),
+          "sec" -> Json.fixed(r.sec, 3), "ratio" -> Json.fixed(r.sec / prior(k), 2),
+          "probe_factor" -> Json.fixed(pf, 2), "loadavg_mean" -> Json.fixed(lm, 2))
+    }
     // in-band scaling contract (r16): the knobs the harness actually
     // honored, so a reader of the line can confirm `Session.cpus` /
     // `Session.sfDir` reached the session without reading the code
@@ -317,10 +277,38 @@ object Bench {
     // the same env var; flat low/high-core ratios at sf0.1 are fixed-
     // cost saturation, not an ignored knob — evidence/scaling_r16.json
     // shows the same binary separating 8 vs 32 cores at sf1). No cpus
-    // gives the legacy shape; every string goes through Json.str so the
-    // line parses whatever the caller passes
-    val envJson = cpus.fold("")(n =>
-      s""""cpus":$n,"master":${Json.str(master)},"sf_dir":${Json.str(sfDir)},""")
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson"queries":$qs,"warmup_queries":$wq,"memoized":$memo,"failed":$failed,"bench_failures":$nFailed,"playback_rps":$playbackRps%.0f,"playback_rps_agg8":$playbackAgg8%.0f,"host_probe_sec":$probeJson,"host_noise_factor":$noise%.2f,"host_sentinel":$sentJson,"host_scaling_ratio":$worstScaling%.2f,"phase_contention":$phaseJson,"query_contention":$qcJson,"regressions":$regressions,"prior_bench":$priorJson,"playback_stop_interrupts":$stopInterrupts,"task_failed":$taskFailed,"task_killed":$taskKilled,"sf":${Json.str(sfDir)}}"""
+    // gives the legacy shape; the dataset is the line's `sf` field
+    val env = cpus.fold(ListMap.empty[String, Any])(n => ListMap("cpus" -> n, "master" -> master))
+    Json.mapper.writeValueAsString(ListMap[String, Any]("metric" -> "total",
+      "value" -> Json.fixed(total, 3), "unit" -> "sec") ++ env ++ ListMap(
+      "queries" -> ListMap(results.map { case (k, r) => k -> Json.fixed(r.sec, 3) }: _*),
+      // warmup-pass walls: where one-time costs live (JIT, page cache,
+      // memoized model trains) — t39's 512-merge train wall is THIS
+      // map's entry, never the steady-state row
+      "warmup_queries" -> ListMap(results.collect {
+        case (k, r) if r.warmupSec >= 0 => k -> Json.fixed(r.warmupSec, 3) }: _*),
+      "memoized" -> results.map(_._1).filter(MemoizedBench),
+      "failed" -> results.collect { case (k, r) if r.failed => k },
+      "bench_failures" -> nFailed,
+      "playback_rps" -> Json.fixed(playbackRps, 0),
+      "playback_rps_agg8" -> Json.fixed(playbackAgg8, 0),
+      "host_probe_sec" -> probes.map(Json.fixed(_, 3)),
+      "host_noise_factor" -> Json.fixed(noise, 2),
+      "host_sentinel" -> sentinels.map(_.tree),
+      "host_scaling_ratio" -> Json.fixed(worstScaling, 2),
+      // phase-LOCAL contention: each headline number's own window,
+      // sampled concurrently while that phase ran (loadavg + low-duty
+      // probe) — the bracketing sentinels attribute the run, these
+      // attribute the number (r12 verdict: agg8 must carry its phase's
+      // reading)
+      "phase_contention" -> ListMap(phases.map { case (k, p) => k -> p.tree }: _*),
+      // per-QUERY contention: the samples taken while each bench entry
+      // was the one running (mark-at-start + periodic ticks), so a
+      // single-query outlier carries its own window's evidence
+      "query_contention" -> ListMap(results.flatMap { case (k, _) =>
+        queryContention.get(k).map(p => k -> p.tree) }: _*),
+      "regressions" -> regressions, "prior_bench" -> priorName,
+      "playback_stop_interrupts" -> stopInterrupts, "task_failed" -> taskFailed,
+      "task_killed" -> taskKilled, "sf" -> sfDir))
   }
 }

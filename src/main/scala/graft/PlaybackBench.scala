@@ -7,6 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import scala.collection.immutable.ListMap
+
 /** Playback throughput benchmark: exports the events table to CSV once,
   * then replays it forever through the csvplayback source at the
   * reference's validated 1M readings/sec ceiling, reporting sustained
@@ -90,8 +92,10 @@ object PlaybackBench {
       probeMaxSec: Double) {
     def probeFactor: Double =
       if (probeMedSec > 0) probeMedSec / MiniQuietSec else -1.0
-    def json: String =
-      f"""{"samples":$samples,"loadavg_min":$loadMin%.2f,"loadavg_mean":$loadMean%.2f,"loadavg_max":$loadMax%.2f,"probe_med_sec":$probeMedSec%.4f,"probe_max_sec":$probeMaxSec%.4f,"probe_factor":$probeFactor%.2f}"""
+    def tree: ListMap[String, Any] = ListMap("samples" -> samples,
+      "loadavg_min" -> Json.fixed(loadMin, 2), "loadavg_mean" -> Json.fixed(loadMean, 2),
+      "loadavg_max" -> Json.fixed(loadMax, 2), "probe_med_sec" -> Json.fixed(probeMedSec, 4),
+      "probe_max_sec" -> Json.fixed(probeMaxSec, 4), "probe_factor" -> Json.fixed(probeFactor, 2))
   }
 
   /** Daemon sampler: every `periodMs` reads `/proc/loadavg`, every
@@ -217,19 +221,17 @@ object PlaybackBench {
   final case class HostSentinel(
       probe1Sec: Double, probeNSec: Double, nThreads: Int,
       scalingRatio: Double, availableProcessors: Int, loadAvg: Double) {
-    def json: String =
-      f"""{"probe1_sec":$probe1Sec%.3f,"probeN_sec":$probeNSec%.3f,"n_threads":$nThreads,"scaling_ratio":$scalingRatio%.2f,"available_processors":$availableProcessors,"loadavg_1m":$loadAvg%.2f}"""
+    def tree: ListMap[String, Any] = ListMap(
+      "probe1_sec" -> Json.fixed(probe1Sec, 3), "probeN_sec" -> Json.fixed(probeNSec, 3),
+      "n_threads" -> nThreads, "scaling_ratio" -> Json.fixed(scalingRatio, 2),
+      "available_processors" -> availableProcessors, "loadavg_1m" -> Json.fixed(loadAvg, 2))
   }
 
   def hostSentinel(): HostSentinel = {
     val cores = Runtime.getRuntime.availableProcessors
     val t1 = cpuProbe(1)
     val tN = cpuProbe(cores)
-    val load = try java.nio.file.Files
-      .readString(java.nio.file.Paths.get("/proc/loadavg"))
-      .trim.split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-    HostSentinel(t1, tN, cores, tN / t1, cores, load)
+    HostSentinel(t1, tN, cores, tN / t1, cores, readLoadAvg())
   }
 
   /** Count of playback queries whose teardown drain deadline expired
@@ -396,7 +398,8 @@ object PlaybackBench {
       val n = args.drop(1).headOption.map(_.toInt).getOrElse(7)
       val xs = (1 to n).map(_ => cpuProbe())
       println(xs.map(x => f"$x%.3f").mkString("probe_sec=[", ",", "]"))
-      (1 to math.min(n, 3)).foreach(_ => println(hostSentinel().json))
+      (1 to math.min(n, 3)).foreach(_ =>
+        println(Json.mapper.writeValueAsString(hostSentinel().tree)))
       return
     }
     val sfDir = Session.sfDir
@@ -423,7 +426,13 @@ object PlaybackBench {
     val probeAfter = cpuProbe()
     val sentAfter = hostSentinel()
     val noise = ((probeBefore + probeAfter) / 2.0) / QuietProbeSec
-    println(f"""{"metric":"playback_rps","value":$rps%.0f,"unit":"rows/sec","sf":"$sfDir","streams":$streams,"host_probe_sec":[$probeBefore%.3f,$probeAfter%.3f],"host_noise_factor":$noise%.2f,"host_sentinel":[${sentBefore.json},${sentAfter.json}],"phase_contention":{"playback":${phase.json}},"playback_stop_interrupts":${stopInterrupts.get}}""")
+    println(Json.mapper.writeValueAsString(ListMap("metric" -> "playback_rps",
+      "value" -> Json.fixed(rps, 0), "unit" -> "rows/sec", "sf" -> sfDir, "streams" -> streams,
+      "host_probe_sec" -> Seq(Json.fixed(probeBefore, 3), Json.fixed(probeAfter, 3)),
+      "host_noise_factor" -> Json.fixed(noise, 2),
+      "host_sentinel" -> Seq(sentBefore.tree, sentAfter.tree),
+      "phase_contention" -> ListMap("playback" -> phase.tree),
+      "playback_stop_interrupts" -> stopInterrupts.get)))
     spark.stop()
   }
 }

@@ -284,25 +284,31 @@ class CsvPlaybackTable(cfg: PlaybackConfig, path: Option[String])
   * delete/rename a file that was never played. */
 case class PlaybackOffset(totalRows: Long, file: Option[String] = None,
     fileStart: Long = 0L, fileBytes: Long = -1L) extends Offset {
-  override def json(): String = file match {
+  // Spark's Offset takes equals, hashCode and toString from json(), and
+  // the stream thread compares offsets on every poll, about nine json()
+  // calls a poll: write the immutable offset once, not per call
+  override def json(): String = text
+
+  // a node tree, not a ListMap: the first ListMap write spends tens of
+  // ms building its Scala-map serializer, inside the query's first batch
+  @transient private lazy val text: String = graft.Json.mapper.writeValueAsString(file match {
     case Some(f) =>
       // fileBytes is the anchor's identity: a same-named file that
       // appears after the anchored one was rotated away must not be
       // mistaken for it on recovery (its bytes differ)
-      s"""{"totalRows":$totalRows,"file":${graft.Json.str(f)},"fileStart":$fileStart,"fileBytes":$fileBytes}"""
+      graft.Json.mapper.createObjectNode().put("totalRows", totalRows).put("file", f)
+        .put("fileStart", fileStart).put("fileBytes", fileBytes)
     case None =>
       // fileStart must survive even between files: it is where the NEXT
       // file begins, and dropping it across a restart re-bases the
       // rotate check at 0 — which would post-process an unplayed file
-      s"""{"totalRows":$totalRows,"fileStart":$fileStart}"""
-  }
+      graft.Json.mapper.createObjectNode().put("totalRows", totalRows).put("fileStart", fileStart)
+  })
 }
 
 object PlaybackOffset {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   def parse(json: String): PlaybackOffset = {
-    val o = mapper.readTree(json)
+    val o = graft.Json.mapper.readTree(json)
     PlaybackOffset(o.path("totalRows").asLong(0L),
       Option(o.get("file")).map(_.asText), o.path("fileStart").asLong(0L),
       o.path("fileBytes").asLong(-1L))

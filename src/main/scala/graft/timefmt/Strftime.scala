@@ -20,7 +20,7 @@ object Strftime {
     'M' -> "mm",
     'S' -> "ss",
     'f' -> "SSSSSS", // microseconds (6 digits)
-    'z' -> "xx",     // +0000-style offset (python %z)
+    'z' -> "[XXX][XX]", // python %z: +HH:MM, +HHMM or Z (no one java pattern reads all three)
     'Z' -> "zz",
     'j' -> "DDD",
     'a' -> "EEE",

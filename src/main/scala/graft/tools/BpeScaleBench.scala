@@ -1,8 +1,10 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Json, Tables}
 import graft.operators.Bpe
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** Dev harness: BPE train wall-time vs merge count on the wide-vocab
   * fixture (t39/t40's corpus — ≥5k word types derived from orders via
@@ -47,10 +49,12 @@ object BpeScaleBench {
       System.err.println(
         f"merges=$m%4d train=$tTrain%7.1fs local=$tLocal%5.1fs " +
           f"local_eq=$eq enc=$tEnc%5.1fs tokens=$nTok")
-      f"""{"merges":$m,"train_sec":$tTrain%.2f,"train_local_sec":$tLocal%.2f,"local_equals_distributed":$eq,"encode_sec":$tEnc%.2f,"encoded_tokens":$nTok}"""
+      ListMap("merges" -> m, "train_sec" -> Json.fixed(tTrain, 2),
+        "train_local_sec" -> Json.fixed(tLocal, 2), "local_equals_distributed" -> eq,
+        "encode_sec" -> Json.fixed(tEnc, 2), "encoded_tokens" -> nTok)
     }
-    println(
-      s"""{"fixture":"$sfDir","word_types":$nTypes,"rows":[${rows.mkString(",")}]}""")
+    println(Json.mapper.writeValueAsString(
+      ListMap("fixture" -> sfDir, "word_types" -> nTypes, "rows" -> rows)))
     spark.stop()
   }
 }

@@ -1,7 +1,10 @@
 package graft.tools
 
+import graft.Json
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** Skewed-graph bench (dev tool, verdict r12 §5): the registry's graph
   * queries derive their edges from `doc_id % 293` closed forms, which
@@ -95,7 +98,14 @@ object GraphSkewBench {
     }
     val sent1 = graft.PlaybackBench.hostSentinel()
 
-    println(f"""{"metric":"graph_skew","sf":"$sfDir","edges":$total,"hot_dst0_share_ppm":${hot * 1000000 / total},"q68_skew_sec":$prSec%.3f,"pagerank_rows":$prRows,"top_node":${prTop._1},"q74_cap_sec":$capSec%.3f,"q74_cap_rows":$capRows,"q74_uncapped_sec":$uncapSec%.3f,"q74_uncapped_rows":$uncapRows,"iter_bhj":${n(iterPlan, "BroadcastHashJoin")},"iter_smj":${n(iterPlan, "SortMergeJoin")},"iter_skewjoin":${n(iterPlan, "skew=true")},"iter_partial_agg":${n(iterPlan, "partial_")},"host_sentinel":[${sent0.json},${sent1.json}]}""")
+    println(Json.mapper.writeValueAsString(ListMap("metric" -> "graph_skew",
+      "sf" -> sfDir, "edges" -> total, "hot_dst0_share_ppm" -> hot * 1000000 / total,
+      "q68_skew_sec" -> Json.fixed(prSec, 3), "pagerank_rows" -> prRows, "top_node" -> prTop._1,
+      "q74_cap_sec" -> Json.fixed(capSec, 3), "q74_cap_rows" -> capRows,
+      "q74_uncapped_sec" -> Json.fixed(uncapSec, 3), "q74_uncapped_rows" -> uncapRows,
+      "iter_bhj" -> n(iterPlan, "BroadcastHashJoin"), "iter_smj" -> n(iterPlan, "SortMergeJoin"),
+      "iter_skewjoin" -> n(iterPlan, "skew=true"), "iter_partial_agg" -> n(iterPlan, "partial_"),
+      "host_sentinel" -> Seq(sent0.tree, sent1.tree))))
     spark.stop()
   }
 }

@@ -1,7 +1,10 @@
 package graft.tools
 
+import graft.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** Deterministic heavy-tailed (Zipfian-df) corpus fixture: the
   * boilerplate-soaked web-text shape the d28 prefix filter exists for,
@@ -61,7 +64,8 @@ object ZipfCorpus {
       .filter(col("df") <= cap)
     val stats = dfs.agg(sum(col("df")).as("sum_df"),
       sum(col("df") * col("df")).as("sum_df2")).head()
-    println(s"""{"fixture":"zipf","n":$n,"df_cap":$cap,"sum_df":${stats.getLong(0)},"sum_df2":${stats.getLong(1)}}""")
+    println(Json.mapper.writeValueAsString(ListMap("fixture" -> "zipf", "n" -> n,
+      "df_cap" -> cap, "sum_df" -> stats.getLong(0), "sum_df2" -> stats.getLong(1))))
 
     for (prefix <- Seq(false, true); round <- 1 to 2) {
       graft.operators.OpCaches.release(spark)
@@ -71,7 +75,9 @@ object ZipfCorpus {
         maxShingleDocFreq = cap, prefixFilter = prefix).count()
       val sec = (System.nanoTime() - t0) / 1e9
       graft.operators.OpCaches.release(spark)
-      println(f"""{"path":"${if (prefix) "prefix" else "selfjoin"}","round":$round,"sec":$sec%.2f,"pairs":$pairs}""")
+      val path = if (prefix) "prefix" else "selfjoin"
+      println(Json.mapper.writeValueAsString(
+        ListMap("path" -> path, "round" -> round, "sec" -> Json.fixed(sec, 2), "pairs" -> pairs)))
     }
     spark.stop()
   }

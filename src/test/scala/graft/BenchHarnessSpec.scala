@@ -51,13 +51,14 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(json.contains(""""bench_failures":0"""), json)
   }
 
-  test("renderJson emits the in-band scaling contract (cpus/master/sf_dir)") {
+  test("renderJson emits the in-band scaling contract (cpus/master/sf)") {
     val json = Bench.renderJson(
       Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf",
       cpus = Some(32), master = "local[32]")
     assert(json.contains(""""cpus":32"""), json)
     assert(json.contains(""""master":"local[32]""""), json)
-    assert(json.contains(""""sf_dir":"/tmp/sf""""), json)
+    assert(json.contains(""""sf":"/tmp/sf""""), json)
+    assert(!json.contains(""""sf_dir""""), json)
     // legacy callers (no cpus) keep the old shape — no dangling comma
     val legacy = Bench.renderJson(
       Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, "/tmp/sf")
@@ -75,7 +76,7 @@ class BenchHarnessSpec extends AnyFunSuite {
     val escaped = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
       Bench.renderJson(Seq("a" -> Bench.QueryResult(1.0, 5L)), -1.0, -1.0, odd,
         cpus = Some(8), master = "local[8]"))
-    assert(escaped.get("sf_dir").asText == odd && escaped.get("sf").asText == odd)
+    assert(escaped.get("sf").asText == odd)
   }
 
   test("renderJson carries the parallelism sentinel and task accounting verbatim") {
@@ -150,10 +151,60 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(marks.count(_ == "a") == 4 && marks.count(_ == "b") == 4) // warmup + 3
   }
 
+  test("renderJson keeps every key, its order and its decimals byte for byte") {
+    val st = PlaybackBench.PhaseStats(3, 0.5, 1.125, 2.0, 0.00812345, 0.0125)
+    val json = Bench.renderJson(
+      Seq("q1" -> Bench.QueryResult(1.23456, 10L, 4.5),
+        "t39_bpe_wide_train" -> Bench.QueryResult(0.5, 3L, 60.0),
+        "bad" -> Bench.QueryResult(-1.0, -1L)),
+      1015234.5, 3.9e6, "/tmp/sf",
+      probes = Seq(0.27, 0.2915),
+      sentinels = Seq(PlaybackBench.HostSentinel(0.28, 0.33, 4, 0.33 / 0.28, 4, 1.5)),
+      stopInterrupts = 1L, taskFailed = 2L, taskKilled = 3L,
+      phases = Seq("playback" -> st), queryContention = Map("q1" -> st),
+      prior = Map("q1" -> 0.5), priorName = Some("./BENCH_r16.json"),
+      cpus = Some(4), master = "local[4]")
+    val stats = """{"samples":3,"loadavg_min":0.50,"loadavg_mean":1.13,"loadavg_max":2.00,""" +
+      """"probe_med_sec":0.0081,"probe_max_sec":0.0125,"probe_factor":0.98}"""
+    assert(json ==
+      """{"metric":"total","value":1.735,"unit":"sec","cpus":4,"master":"local[4]",""" +
+      """"queries":{"q1":1.235,"t39_bpe_wide_train":0.500,"bad":-1.000},""" +
+      """"warmup_queries":{"q1":4.500,"t39_bpe_wide_train":60.000},""" +
+      """"memoized":["t39_bpe_wide_train"],"failed":["bad"],"bench_failures":1,""" +
+      """"playback_rps":1015235,"playback_rps_agg8":3900000,"host_probe_sec":[0.270,0.292],""" +
+      """"host_noise_factor":1.10,"host_sentinel":[{"probe1_sec":0.280,"probeN_sec":0.330,""" +
+      """"n_threads":4,"scaling_ratio":1.18,"available_processors":4,"loadavg_1m":1.50}],""" +
+      s""""host_scaling_ratio":1.18,"phase_contention":{"playback":$stats},""" +
+      s""""query_contention":{"q1":$stats},"regressions":[{"query":"q1","prev_sec":0.500,""" +
+      """"sec":1.235,"ratio":2.47,"probe_factor":0.98,"loadavg_mean":1.13}],""" +
+      """"prior_bench":"./BENCH_r16.json","playback_stop_interrupts":1,"task_failed":2,""" +
+      """"task_killed":3,"sf":"/tmp/sf"}""", json)
+  }
+
   test("prior-round regression annotation: ratio > 1.3 only, with its window") {
     val prior = Bench.parsePriorQueries(
       """{"metric":"total","queries":{"fast":0.500,"slow":1.000,"gone":2.0},"sf":"x"}""")
     assert(prior == Map("fast" -> 0.5, "slow" -> 1.0, "gone" -> 2.0))
+    // the committed BENCH_r*.json files are the driver's pretty-printed
+    // wrapper, the line itself under "parsed"
+    val wrapped =
+      """{
+        |  "n": 16,
+        |  "rc": 0,
+        |  "tail": "... \"queries\":{\"stale\":9.0} ...",
+        |  "parsed": {
+        |    "metric": "total",
+        |    "queries": {
+        |      "fast": 0.5,
+        |      "slow": 1.0,
+        |      "gone": 2.0
+        |    },
+        |    "warmup_queries": {
+        |      "fast": 3.0
+        |    }
+        |  }
+        |}""".stripMargin
+    assert(Bench.parsePriorQueries(wrapped) == prior)
     val json = Bench.renderJson(
       Seq("fast" -> Bench.QueryResult(0.55, 5L), // 1.1× — quiet
         "slow" -> Bench.QueryResult(1.70, 5L), // 1.7× — annotated

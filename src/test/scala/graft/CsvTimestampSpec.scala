@@ -169,6 +169,26 @@ class CsvTimestampSpec extends SparkSpec {
     }
   }
 
+  test("%z reads the offset forms Python's strptime %z takes, ANSI on and off; the kernel only +HHMM") {
+    val instant = java.time.LocalDateTime.parse("2019-12-12T10:00:00.000125")
+    def micros(offset: String): Long = {
+      val i = instant.toInstant(java.time.ZoneOffset.of(offset))
+      i.getEpochSecond * 1000000L + i.getNano / 1000L
+    }
+    val forms = Seq("+0530" -> micros("+05:30"), "-0800" -> micros("-08:00"),
+      "+05:30" -> micros("+05:30"), "-08:00" -> micros("-08:00"), "Z" -> micros("Z"))
+    for (ansi <- Seq("true", "false")) {
+      val s = session("spark.sql.ansi.enabled" -> ansi)
+      val viaHelper = rowEval(s, c => TimestampStyles.csvTimestamp(s, c, DefaultFmt))
+      val kernel = rowEval(s, c => CsvTimestamp.parse_csv_timestamp(c, DefaultFmt))
+      forms.foreach { case (z, us) =>
+        val v = s"2019-12-12 10:00:00.000125$z"
+        assert(viaHelper(v) == Right(Some(us)), s"'$v' ansi=$ansi")
+        assert(kernel(v) == Right(if (z.length == 5 && z(3) != ':') Some(us) else None), s"kernel on '$v'")
+      }
+    }
+  }
+
   test("the kernel runs inside whole-stage codegen and matches to_timestamp there") {
     val s = session("spark.sql.ansi.enabled" -> "false")
     val inputs = strings(DefaultFmt, 7L, 20000)

@@ -488,6 +488,9 @@ class PlaybackStreamSpec extends SparkSpec {
     assert(!odd.json().exists(_ < ' '), odd.json())
     assert(PlaybackOffset.parse(odd.json()) == odd)
     assert(PlaybackOffset.parse("""{"totalRows":4}""") == PlaybackOffset(4L))
+    // written once per offset: equals/hashCode/toString reuse the same string
+    assert(odd.json() eq odd.json())
+    assert(odd.hashCode == odd.json().hashCode && odd.toString == odd.json())
   }
 
   test("non-replay recovery clamps a range that overruns the file (no wrap re-emit)") {
