@@ -34,11 +34,6 @@ object Dedup {
       .drop("_rn")
   }
 
-  /** Exact-dup groups: fingerprint → (n_copies, keeper id). */
-  def dupGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.groupBy(TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
-      .agg(count(lit(1)).as("n_copies"), min(col(idCol)).as("keeper"))
-
   /** Exact dedup, keep-best semantics: one surviving row per distinct
     * `textCol` value — the one ranking first by `better` (e.g. quality
     * score descending), with `orderCol` as the deterministic tiebreak.

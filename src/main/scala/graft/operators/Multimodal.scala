@@ -31,17 +31,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Canonical multimodal record schema. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("payload", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("n_frames", IntegerType, nullable = true))), nullable = true)))
-
   /** STUB decoder: a real build would call an image/audio codec here
     * (the `???`-equivalent is the deterministic fake below, so the
     * pipeline is testable end-to-end). */

@@ -11,16 +11,10 @@ import org.apache.spark.sql.functions._
   * with no shuffle (pure map-side filters) — the property that matters
   * when a 100 TB corpus is re-materialized incrementally.
   *
-  * Two hash families: `xxhash64` for in-engine keys (fast), `md5` hex
-  * prefixes where cross-engine reproducibility matters (md5 is
-  * bit-identical everywhere).
+  * The hashes are `md5` hex prefixes, because cross-engine
+  * reproducibility matters (md5 is bit-identical everywhere).
   */
 object Sampling {
-
-  /** Stable bucket in [0, buckets) from a key column (xxhash64-based —
-    * fast path; not portable across engines). */
-  def hashBucket(key: Column, buckets: Int, salt: String = "graft"): Column =
-    pmod(xxhash64(key.cast("string"), lit(salt)), lit(buckets))
 
   /** Portable bucket in [0, 256) — first md5 hex byte of the key. */
   def md5Bucket256(key: Column): Column =

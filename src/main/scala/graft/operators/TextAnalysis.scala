@@ -38,7 +38,6 @@ object TextAnalysis {
         length(text).cast("double"))
 
   def digitRatio(text: Column): Column = charRatio(text, "[0-9]")
-  def upperRatio(text: Column): Column = charRatio(text, "[A-Z]")
   def punctRatio(text: Column): Column = charRatio(text, "[\\p{Punct}]")
   def spaceRatio(text: Column): Column = charRatio(text, "\\s")
 

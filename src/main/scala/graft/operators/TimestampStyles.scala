@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.time.Instant
+import java.util.regex.Pattern
 
 /** The reference's four `timestampStyle` rewrites (SURVEY.md §2.4;
   * csvplayback.py:713-756). Each is a `DataFrame => DataFrame` stage
@@ -55,10 +56,28 @@ object TimestampStyles {
     * strftime format's Java pattern, behind the byte kernel
     * ([[graft.timefmt.CsvTimestamp]]) where `spark`'s conf lets it give
     * the same answer, so a kernel-read string skips java.time and any
-    * other string still gets Spark's own value, null or error. */
+    * other string still gets Spark's own value, null or error.
+    *
+    * Python's `%z` reads exactly one offset (`Z`, `+HHMM` or `+HH:MM`);
+    * the pattern `[XXX][XX]` also reads none or two. So where `%z` ends
+    * the format (literals may follow) and java.time parses, the fallback
+    * rewrites a `+HHMM` there to `+HH:MM` and reads it with the strict
+    * `XXX`: a missing or doubled offset then fails like any other
+    * unparseable string, null or `CANNOT_PARSE_TIMESTAMP` as ANSI says.
+    * (A coalesce of strict `XXX` and `XX` reads would need a second,
+    * non-raising read under ANSI; the rewrite keeps the one read.) The
+    * kernel already rejects both. */
   def csvTimestamp(spark: SparkSession, c: Column, strftimeFmt: String): Column = {
     val text = c.cast("string")
-    val plain = to_timestamp(text, Strftime.toJava(strftimeFmt))
+    val offset = Strftime.endingOffset(strftimeFmt).filter(_ => !CsvTimestamp.legacy(spark))
+    val (input, javaFmt) = offset match {
+      case Some((head, tail)) =>
+        val after = Pattern.quote(tail.replace("%%", "%"))
+        (regexp_replace(text, s"([+-]\\d\\d)(\\d\\d)($after)$$", "$1:$2$3"),
+          Strftime.toJava(head) + "XXX" + Strftime.toJava(tail))
+      case None => (text, Strftime.toJava(strftimeFmt))
+    }
+    val plain = to_timestamp(input, javaFmt)
     if (CsvTimestamp.applies(spark, strftimeFmt))
       coalesce(CsvTimestamp.parse_csv_timestamp(text, strftimeFmt), plain)
     else plain

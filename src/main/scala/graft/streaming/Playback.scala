@@ -30,12 +30,11 @@ object Playback {
     * heavy sinks should use `writeStream` directly instead. */
   def start(spark: SparkSession, cfg: PlaybackConfig)
       (ingest: Seq[Row] => Unit): StreamingQuery = {
-    val readings = PlaybackStream.readings(spark, cfg.validated)
-    readings.writeStream
+    val writer = PlaybackStream.readings(spark, cfg.validated).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         ingest(batch.collect().toSeq)
       }
-      .start()
+    withLocalCheckpoints(spark)(writer.start())
   }
 
   /** Burst/continuous emission into an arbitrary sink format.
@@ -48,10 +47,31 @@ object Playback {
     * chunk is thus granted within ~10 ms of its tick; a slower poll
     * grid would only add its own phase to every batch's lag. */
   def startTo(spark: SparkSession, cfg: PlaybackConfig, format: String,
-      options: Map[String, String] = Map.empty): StreamingQuery =
-    PlaybackStream.readings(spark, cfg.validated)
+      options: Map[String, String] = Map.empty): StreamingQuery = {
+    val writer = PlaybackStream.readings(spark, cfg.validated)
       .writeStream.format(format).options(options)
-      .start()
+    withLocalCheckpoints(spark)(writer.start())
+  }
+
+  /** Spark's conf naming the checkpoint file manager class. */
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Runs `start` with [[LocalCheckpointFileManager]] as the checkpoint
+    * file manager, unless the caller has named one in the session or the
+    * Hadoop conf. The conf is set only for the `start()` call:
+    * `StreamExecution` clones the session in its constructor, so the
+    * query keeps the manager and the caller's conf reads unset again once
+    * `start()` returns. Starts are serialised so that two playback starts
+    * on one session do not unset each other's manager. */
+  private def withLocalCheckpoints(spark: SparkSession)(start: => StreamingQuery)
+      : StreamingQuery = synchronized {
+    if (spark.conf.getOption(ManagerKey).isDefined ||
+        spark.sparkContext.hadoopConfiguration.get(ManagerKey) != null) start
+    else {
+      spark.conf.set(ManagerKey, classOf[LocalCheckpointFileManager].getName)
+      try start finally spark.conf.unset(ManagerKey)
+    }
+  }
 
   /** plugin_reconfigure (csvplayback.py:336-353): stop, swap config,
     * start — without the reference's hard-coded 10 s sleep (stop() is

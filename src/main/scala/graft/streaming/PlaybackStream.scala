@@ -18,10 +18,11 @@ import org.apache.spark.sql.types._
   * Parsing runs against a schema resolved once, driver-side, from the
   * file head — mirroring the reference's single schema resolution at
   * `read_csv_file` (csvplayback.py:556-673). A line with no `"` byte
-  * that is well-formed UTF-8 is cut at `,` in one byte pass
-  * ([[graft.functions.CsvLine]]); any other line goes to `from_csv`,
-  * which gives the same fields on the lines the split takes (see
-  * [[parseLine]]).
+  * that is well-formed UTF-8 and whose typed fields are plain decimals is
+  * cut at `,` and each field read into its type in one byte pass
+  * ([[graft.functions.CsvLine]]); any other line goes through
+  * [[parseLine]] and a cast per column, which give the same values on
+  * the lines the kernel takes.
   */
 object PlaybackStream {
 
@@ -71,7 +72,11 @@ object PlaybackStream {
     * `int` column whose sample infers as double goes through double, so
     * it truncates), or else to its inferred type. The sample decides no
     * typed column's type, so a value past the sample is read as the
-    * spec says. The PassInDatapoint meta is attached last
+    * spec says. The one-pass kernel (`CsvLine.split_quote_free`) reads
+    * each string, int, long or double column of a line it takes straight
+    * into its type and any other column as text for its cast; only the
+    * lines it rejects pay for the split/`from_csv` parse ([[parseLine]])
+    * and a cast per column. The PassInDatapoint meta is attached last
     * (csvplayback.py:661-671). */
   def parse(spark: SparkSession, cfg: PlaybackConfig, file: String,
       lines: DataFrame): DataFrame = {
@@ -91,19 +96,34 @@ object PlaybackStream {
         val parseNames = names.zipWithIndex.map { case (n, i) => if (n.isEmpty) s"_drop$i" else n }
         val parseSchema = StructType(parseNames.map(StructField(_, StringType)))
         val inferred = inferDtypes(spark, cfg, file, parseNames)
-        val kept = names.filter(_.nonEmpty).map { n =>
-          val text = col("_parsed")(n)
-          (spec.dtypes.get(n) match {
-            case Some(StringType) => text
-            // pandas truncates a float column cast to int
-            case Some(LongType) if inferred.get(n).contains(DoubleType) =>
-              text.cast(DoubleType).cast(LongType)
-            case Some(dt) => text.cast(dt)
-            case None => inferred.get(n).filter(_ != StringType).fold(text)(text.cast)
-          }).as(n)
-        }
-        lines.withColumn("_parsed", parseLine(col("value"), parseSchema))
-          .select(kept ++ carried: _*)
+        // each kept column's type: its `useColumns` type, else the inferred one
+        val typeOf = names.filter(_.nonEmpty).map { n =>
+          n -> spec.dtypes.get(n).orElse(inferred.get(n)).getOrElse(StringType)
+        }.toMap
+        // pandas truncates a float column cast to int
+        def truncates(n: String) = spec.dtypes.get(n).contains(LongType) &&
+          inferred.get(n).contains(DoubleType)
+        def cast(n: String, text: Column): Column =
+          if (truncates(n)) text.cast(DoubleType).cast(LongType)
+          else if (typeOf(n) == StringType) text
+          else text.cast(typeOf(n))
+        // the kernel reads a column straight into its type where it reads
+        // that type exactly, else as text that `cast` finishes
+        def kernelType(n: String): DataType =
+          if (n.isEmpty) NullType
+          else if (truncates(n) || CsvLine.kind(typeOf(n)).isEmpty) StringType
+          else typeOf(n)
+        val kernelSchema = StructType(parseNames.zip(names).map { case (p, n) =>
+          StructField(p, kernelType(n))
+        })
+        // a line the kernel rejects goes through the split/from_csv parse
+        // and the casts
+        lines.withColumn("_typed", CsvLine.split_quote_free(col("value"), kernelSchema))
+          .withColumn("_parsed", when(col("_typed").isNull, parseLine(col("value"), parseSchema)))
+          .select(names.filter(_.nonEmpty).map { n =>
+            val read = if (kernelType(n) == StringType) cast(n, col("_typed")(n)) else col("_typed")(n)
+            when(col("_typed").isNotNull, read).otherwise(cast(n, col("_parsed")(n))).as(n)
+          } ++ carried: _*)
       }
     cfg.headerMethod match {
       case HeaderMethod.PassInDatapoint =>
@@ -114,9 +134,9 @@ object PlaybackStream {
   }
 
   /** A raw line as the struct of strings `parseSchema` names. Quote-free,
-    * well-formed UTF-8 lines take the one-pass split; the rest (quoted
-    * fields, invalid bytes, which `from_csv` decodes to U+FFFD) take
-    * Univocity. The line's own bytes pick the path. */
+    * well-formed UTF-8 lines take the one-pass split over that all-string
+    * schema; the rest (quoted fields, invalid bytes, which `from_csv`
+    * decodes to U+FFFD) take Univocity. The line's own bytes pick the path. */
   private[graft] def parseLine(value: Column, parseSchema: StructType): Column =
     coalesce(CsvLine.split_quote_free(value, parseSchema),
       from_csv(value, parseSchema, Map("escape" -> "\"")))

@@ -223,12 +223,17 @@ object CsvTimestamp {
     * `to_timestamp` plan is built. */
   def applies(spark: SparkSession, strftime: String): Boolean =
     layout(strftime).exists { l =>
-      !spark.conf.get("spark.sql.legacy.timeParserPolicy").equalsIgnoreCase("LEGACY") &&
+      !legacy(spark) &&
         spark.conf.get("spark.sql.timestampType").equalsIgnoreCase("TIMESTAMP_LTZ") &&
         (l.offset >= 0 ||
           DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone")).getRules
             .isFixedOffset)
     }
+
+  /** Whether `spark` parses timestamps with the LEGACY
+    * `SimpleDateFormat` policy rather than java.time. */
+  def legacy(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.legacy.timeParserPolicy").equalsIgnoreCase("LEGACY")
 
   def parse_csv_timestamp(text: Column, strftime: String): Column =
     GraftBridge.column(ParseCsvTimestamp(GraftBridge.expression(text), strftime))

@@ -29,6 +29,25 @@ object Strftime {
     'B' -> "MMMM",
     'p' -> "a")
 
+  /** A format whose only `%z` is its last directive, split into the
+    * format before it and the one after it (literals and `%%` only);
+    * None otherwise. */
+  def endingOffset(strftime: String): Option[(String, String)] = {
+    var last = -1
+    var offsets = 0
+    var i = 0
+    while (i < strftime.length) {
+      if (strftime.charAt(i) == '%' && i + 1 < strftime.length) {
+        if (strftime.charAt(i + 1) != '%') last = i
+        if (strftime.charAt(i + 1) == 'z') offsets += 1
+        i += 2
+      } else i += 1
+    }
+    if (offsets == 1 && strftime.charAt(last + 1) == 'z')
+      Some(strftime.take(last) -> strftime.drop(last + 2))
+    else None
+  }
+
   /** @throws IllegalArgumentException on an unknown %-directive
     *         (mirrors the reference's hard failure on bad formats). */
   def toJava(strftime: String): String = {

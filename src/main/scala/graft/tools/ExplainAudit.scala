@@ -193,7 +193,6 @@ object ExplainAudit {
           def n(pat: String) = pat.r.findAllIn(plan).length
           val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan)
             .filterNot(_ == "PushedFilters: []").mkString(" | ")
-          val readSchemas = "ReadSchema: [^,\n]*".r.findAllIn(plan).map(_.length).toSeq
           val wins = unboundedGlobalWindows(df.queryExecution.executedPlan)
           val (waived, winViolations) =
             if (singleFileCliContract(q.name)) (wins, Nil) else (Nil, wins)

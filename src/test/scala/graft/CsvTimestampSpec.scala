@@ -139,11 +139,32 @@ class CsvTimestampSpec extends SparkSpec {
       .select(build(col("s"))).queryExecution.analyzed.expressions
       .exists(_.exists(_.isInstanceOf[CsvTimestamp.ParseCsvTimestamp]))
 
-  /** The helper's parse of `fmt` equals plain `to_timestamp` on every
-    * string under `s`; returns how many strings the kernel itself took. */
+  /** What the helper must give for `fmt` under `s`: plain `to_timestamp`
+    * with the format's pattern, except that a string the pattern's
+    * `[XXX][XX]` reads but neither strict offset pattern (`XXX`, `XX`)
+    * does — a missing or doubled `%z` offset — fails like an unparseable
+    * string: null, or `CANNOT_PARSE_TIMESTAMP` under ANSI. */
+  private def oracle(s: SparkSession, fmt: String): String => Either[String, Option[Long]] = {
+    val java = graft.timefmt.Strftime.toJava(fmt)
+    val wide = rowEval(s, c => to_timestamp(c, java))
+    if (!java.contains("[XXX][XX]")) wide
+    else {
+      val strict = Seq("XXX", "XX").map(p => rowEval(s, c => to_timestamp(c, java.replace("[XXX][XX]", p))))
+      val failure =
+        if (s.conf.get("spark.sql.ansi.enabled").toBoolean) Left("CANNOT_PARSE_TIMESTAMP")
+        else Right(None)
+      v => {
+        val w = wide(v)
+        if (w.exists(_.isDefined) && !strict.exists(_(v).exists(_.isDefined))) failure else w
+      }
+    }
+  }
+
+  /** The helper's parse of `fmt` equals [[oracle]] on every string under
+    * `s`; returns how many strings the kernel itself took. */
   private def assertExact(s: SparkSession, fmt: String, inputs: Seq[String]): Int = {
     val viaHelper = rowEval(s, c => TimestampStyles.csvTimestamp(s, c, fmt))
-    val plain = rowEval(s, c => to_timestamp(c, graft.timefmt.Strftime.toJava(fmt)))
+    val plain = oracle(s, fmt)
     val kernel = rowEval(s, c => CsvTimestamp.parse_csv_timestamp(c, fmt))
     var took = 0
     inputs.foreach { v =>
@@ -189,15 +210,45 @@ class CsvTimestampSpec extends SparkSpec {
     }
   }
 
+  test("a missing or doubled %z offset fails like an unparseable string, ANSI on and off; the kernel is unchanged") {
+    val base = "2019-12-12 10:00:00.000125"
+    val bad = Seq("", "ZZ", "+05:30+0530")
+      .map(base + _) :+ "at 10%00 on 12.12.2019"
+    for (ansi <- Seq("true", "false")) {
+      val s = session("spark.sql.ansi.enabled" -> ansi)
+      val failure = if (ansi == "true") Left("CANNOT_PARSE_TIMESTAMP") else Right(None)
+      val viaHelper = rowEval(s, c => TimestampStyles.csvTimestamp(s, c, DefaultFmt))
+      val literalAfter = rowEval(s, c => TimestampStyles.csvTimestamp(s, c, "%Y-%m-%d %H:%M:%S.%f%z UTC"))
+      val wide = rowEval(s, c => to_timestamp(c, graft.timefmt.Strftime.toJava(DefaultFmt)))
+      bad.init.foreach { v =>
+        assert(wide(v).exists(_.isDefined), s"'$v' was read by [XXX][XX]")
+        assert(viaHelper(v) == failure, s"'$v' ansi=$ansi")
+        assert(literalAfter(v + " UTC") == failure, s"'$v UTC' ansi=$ansi")
+      }
+      val middle = rowEval(s, c => TimestampStyles.csvTimestamp(s, c, "at %H%%%M on %d.%m.%Y%z"))
+      assert(middle(bad.last) == failure, s"'${bad.last}' ansi=$ansi")
+      assert(middle(bad.last + "+0530").exists(_.isDefined))
+      assert(literalAfter(base + "+0530 UTC") == viaHelper(base + "+05:30"))
+      assert(hasKernel(s, TimestampStyles.csvTimestamp(s, _, DefaultFmt)))
+      val kernel = rowEval(s, c => CsvTimestamp.parse_csv_timestamp(c, DefaultFmt))
+      assert(kernel(base + "+0000").exists(_.isDefined))
+    }
+  }
+
   test("the kernel runs inside whole-stage codegen and matches to_timestamp there") {
     val s = session("spark.sql.ansi.enabled" -> "false")
     val inputs = strings(DefaultFmt, 7L, 20000)
+    // the oracle's rule under ANSI off: what a strict offset pattern reads
+    val java = graft.timefmt.Strftime.toJava(DefaultFmt)
+    def want(c: Column): Column =
+      when(Seq("XXX", "XX").map(p => to_timestamp(c, java.replace("[XXX][XX]", p)).isNotNull)
+        .reduce(_ || _), to_timestamp(c, java))
     val rows = s.sparkContext.parallelize(inputs.zipWithIndex.map { case (v, i) => Row(i.toLong, v) }, 4)
     val df = s.createDataFrame(rows, StructType(Seq(StructField("id", LongType),
         StructField("s", StringType))))
       .select(col("id"),
         unix_micros(TimestampStyles.csvTimestamp(s, col("s"), DefaultFmt)).as("got"),
-        unix_micros(to_timestamp(col("s"), graft.timefmt.Strftime.toJava(DefaultFmt))).as("want"))
+        unix_micros(want(col("s"))).as("want"))
     val stages = df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
     val kernelStages = stages.filter(_.child.exists(_.isInstanceOf[ProjectExec])).map(_.doCodeGen()._2)
       .filter(_.body.contains("graft.timefmt.CsvTimestamp.parse("))

@@ -10,8 +10,11 @@ import scala.jdk.CollectionConverters._
   * engine's sources would bring back a second splitter, and with it a
   * second line rule (`readLine` also ends a line at a lone `\r`). Likewise
   * a CSV timestamp is parsed in one place, `TimestampStyles.csvTimestamp`,
-  * so no style parses without the byte kernel or its fallback rule. Pure
-  * file scan, no SparkSession needed. */
+  * so no style parses without the byte kernel or its fallback rule, and a
+  * line's fields in one place: the one-pass kernel in
+  * `PlaybackStream.parse`, in front of `PlaybackStream.parseLine`. Only
+  * `Playback` names the checkpoint file manager conf, which it sets
+  * around its own starts. Pure file scan, no SparkSession needed. */
 class ReaderGuardSpec extends AnyFunSuite {
 
   private def sources(dirs: String*): Seq[(java.nio.file.Path, String)] =
@@ -40,5 +43,48 @@ class ReaderGuardSpec extends AnyFunSuite {
     val elsewhere = files.map { case (p, text) => p -> count(text) }
       .filter { case (p, n) => n > (if (p.endsWith("TimestampStyles.scala")) 1 else 0) }
     assert(elsewhere.isEmpty, s"a second CSV-timestamp parse: $elsewhere")
+  }
+
+  /** `text` with the body of `def name(` cut out (up to the next blank
+    * line or member), and the body; fails if the def is gone. */
+  private def cutDef(text: String, name: String): (String, String) = {
+    val start = text.indexOf(s"def $name(")
+    assert(start >= 0, s"$name is gone")
+    val end = text.indexOf("\n\n", start)
+    (text.take(start) + text.drop(end), text.substring(start, end))
+  }
+
+  /** Calls of `call` in `text`'s code lines, its own definition not
+    * counted. */
+  private def calls(text: String, call: String): Int =
+    code(text).sliding(call.length).count(_ == call) - code(text).sliding(call.length + 4)
+      .count(_ == s"def $call")
+
+  /** `text` without its comment lines. */
+  private def code(text: String): String = text.linesIterator.map(_.trim)
+    .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//")).mkString("\n")
+
+  test("split_quote_free is built only in PlaybackStream.parse and parseLine, from_csv only in parseLine") {
+    val banned = Seq("split_quote_free(", "from_csv(")
+    val hits = sources("src/main/scala").flatMap { case (p, text) =>
+      val rest =
+        if (p.endsWith("streaming/PlaybackStream.scala")) {
+          val (others, body) = cutDef(text, "parseLine")
+          assert(banned.forall(b => calls(body, b) == 1), s"parseLine must build both: $body")
+          val (outside, parse) = cutDef(others, "parse")
+          assert(calls(parse, banned.head) == 1, s"parse must build the typed kernel once: $parse")
+          outside
+        } else text
+      banned.filter(b => calls(rest, b) > 0).map(b => s"$p: $b")
+    }
+    assert(hits.isEmpty, s"a second line parse: $hits")
+  }
+
+  test("only Playback names the checkpoint file manager conf") {
+    val key = "checkpointFileManagerClass"
+    val hits = sources("src/main/scala").collect {
+      case (p, text) if code(text).contains(key) && !p.endsWith("streaming/Playback.scala") => p
+    }
+    assert(hits.isEmpty, s"the manager conf named outside Playback: $hits")
   }
 }
