@@ -118,10 +118,6 @@ object TimestampStyles {
     two(1).getLong(0) - two(0).getLong(0)
   }
 
-  /** Wraps a post-transform frame into the reference's reading shape
-    * `{asset, timestamp, readings: {datapoint → value}}`
-    * (csvplayback.py:760-771), timestamp stringified with microseconds +
-    * offset like the reference's `str(datetime)`. */
   /** Bias added to epoch micros inside [[eventOrderKey]] so the padded
     * decimal rendering of ANY representable instant is positive —
     * lexicographic order on negative zero-padded decimals is the
@@ -138,6 +134,10 @@ object TimestampStyles {
   def eventOrderKey(ts: Column, id: Column): Column =
     format_string("%020d:%020d", unix_micros(ts) + lit(OrderKeyBiasUs), id)
 
+  /** Wraps a post-transform frame into the reference's reading shape
+    * `{asset, timestamp, readings: {datapoint → value}}`
+    * (csvplayback.py:760-771), timestamp stringified with microseconds +
+    * offset like the reference's `str(datetime)`. */
   def asReadings(df: DataFrame, assetName: String): DataFrame = {
     val dataCols = df.columns.filterNot(c => c == RowIdx || c == TsCol)
     val entries: Seq[Column] = dataCols.map(c => struct(lit(c), col(c).cast("string")))

@@ -105,6 +105,9 @@ object CsvPlaybackStream {
       val relIn = physicalLine - startLine
       Some(startLine + math.min((relIn / SUB_SPLIT + 1) * SUB_SPLIT, s.nLines))
     }
+
+    /** Data rows of the file when its data begins at physical line `dataStart`. */
+    def dataRows(dataStart: Int): Long = math.max(0L, totalLines - dataStart)
   }
 
   /** Builds the line index with ONE Spark job over byte-range splits of
@@ -116,8 +119,9 @@ object CsvPlaybackStream {
     * cluster cores) + a tiny merge, not a single-threaded whole-file
     * read (the r2 verdict's top scale-killer). Compressed files are
     * unsplittable: one task streams the codec and only the line count
-    * comes back (readers line-skip from 0, as before). Both scans read
-    * [[PlaybackIO.BLOCK]]-sized blocks and count '\n' bytes only — the
+    * comes back (readers line-skip from 0, as before), counted by the
+    * reader's own [[ByteLineReader]]. The plain scan reads
+    * [[PlaybackIO.BLOCK]]-sized blocks and counts '\n' bytes only — the
     * same line rule as the reader. */
   def buildLineIndex(sc: org.apache.spark.SparkContext, path: String,
       rangeBytes: Long = INDEX_RANGE_BYTES): FileLineIndex = {
@@ -129,21 +133,12 @@ object CsvPlaybackStream {
     if (PlaybackIO.isCompressed(path)) {
       // unsplittable: one task, count only
       val n = sc.parallelize(Seq(path), 1).map { pth =>
-        val in = PlaybackIO.open(pth, compressed = true)
+        val lines = new ByteLineReader(PlaybackIO.open(pth, compressed = true))
         try {
-          val buf = new Array[Byte](PlaybackIO.BLOCK)
-          var lines = 0L
-          var last: Byte = '\n' // an empty stream has no lines
-          var got = in.read(buf)
-          while (got >= 0) {
-            var i = 0
-            while (i < got) { if (buf(i) == '\n') lines += 1; i += 1 }
-            if (got > 0) last = buf(got - 1)
-            got = in.read(buf)
-          }
-          if (last != '\n') lines += 1 // trailing line without newline
-          lines
-        } finally in.close()
+          var n = 0L
+          while (lines.next()) n += 1
+          n
+        } finally lines.close()
       }.collect().head
       FileLineIndex(n, Array.empty, compressed = true)
     } else {
@@ -267,7 +262,7 @@ class CsvPlaybackTable(cfg: PlaybackConfig, path: Option[String])
         val index = batchIndex.getOrElse(
           throw new IllegalArgumentException("a batch read needs load(path)"))
         val dataStart = CsvPlaybackStream.dataStartLine(cfg)
-        val rows = math.max(0L, index.totalLines - dataStart)
+        val rows = index.dataRows(dataStart)
         CsvPlaybackStream.planPartitions(path.get, index, dataStart, rows, 0L, 0L, rows,
           System.currentTimeMillis() * 1000L)
       }
@@ -315,100 +310,14 @@ object PlaybackOffset {
   }
 }
 
+/** The DSv2 face of the playback source: offsets in, offsets and partitions
+  * out, through the source's [[FileQueue]] and [[Pacer]]. */
 class CsvPlaybackMicroBatchStream(cfg: PlaybackConfig)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private val dir = PlaybackConfig.resolveDataDir(cfg.csvDirName)
-  private val replay = cfg.postProcessMethod == PostProcess.ContinuePlaying
-
-  // driver-side per-file state (the index itself is built distributed,
-  // see CsvPlaybackStream.buildLineIndex; only the merged summaries
-  // live here)
-  private var currentFile: Option[String] = None
-  private var fileRows: Long = 0L        // data rows in the current file
-  private var fileBytes: Long = -1L      // on-disk size (anchor identity)
-  private var fileStartOffset: Long = 0L // totalRows when this file began
+  private val queue = new FileQueue(cfg)
+  private val pacer = new Pacer(cfg.paceSec)
   private var lastEmitMicros: Long = 0L
-  private var lineIndex: CsvPlaybackStream.FileLineIndex =
-    CsvPlaybackStream.FileLineIndex(0L, Array.empty, compressed = false)
-
-  // Pacing state: the source enforces `sampleRate` itself by releasing
-  // at most one chunk per `paceSec` of wall clock (schedule anchored at
-  // the first eligible trigger). Driver-side only — a restart re-anchors
-  // and the WAL'd row offsets stay exact.
-  private var paceStartNanos: Long = Long.MinValue
-  private var chunksGranted: Long = 0L
-
-  /** FileFinder semantics (csvplayback.py:503-517): alphabetically
-    * first match; absent → no progress this trigger. */
-  private def findFile(): Option[String] = {
-    val d = java.nio.file.Paths.get(dir)
-    PlaybackConfig.matchingFiles(d, cfg.csvFileName).headOption.map(_.toString)
-  }
-
-  /** Loads `f` as the current file: builds its line index (one
-    * distributed job) and derives the data-row count. The single
-    * entry point for file state, shared by fresh pickup
-    * ([[ensureFile]]) and checkpoint recovery ([[anchorFromOffset]]). */
-  private def loadFile(f: String): Unit = {
-    currentFile = Some(f)
-    fileBytes =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(f))
-      catch { case _: java.io.IOException => -1L }
-    lineIndex = CsvPlaybackStream.buildLineIndex(
-      org.apache.spark.SparkContext.getOrCreate(), f)
-    fileRows = math.max(0L,
-      lineIndex.totalLines - CsvPlaybackStream.dataStartLine(cfg))
-  }
-
-  private def ensureFile(): Unit = {
-    if (currentFile.isEmpty) findFile().foreach(loadFile)
-  }
-
-  /** Restores file state on a freshly constructed source from a
-    * recovered offset's anchor (checkpoint recovery path — both the
-    * WAL-replayed batch and the first post-restart latestOffset arrive
-    * before any state exists). If the anchored file is still on disk,
-    * the index rebuilds and `fileStartOffset` restores exactly; if the
-    * EOF action already rotated it, the next file picks up with its
-    * base at the recovered row count, so the rotate check can never
-    * fire against a file that was not played. No-op once state exists
-    * or for fresh streams (anchorless initial offset). */
-  private def anchorFromOffset(o: PlaybackOffset): Unit = {
-    // path exists AND holds the same bytes the anchor was written
-    // against — a same-named successor (possible after Rename frees
-    // the name, or a producer re-drop) is NOT the anchored file, and
-    // replaying a WAL range against its bytes would emit wrong rows
-    def isAnchoredFile(f: String): Boolean = {
-      val p = java.nio.file.Paths.get(f)
-      java.nio.file.Files.exists(p) && (o.fileBytes < 0L ||
-        (try java.nio.file.Files.size(p) == o.fileBytes
-         catch { case _: java.io.IOException => false }))
-    }
-    if (currentFile.isEmpty) {
-      o.file match {
-        case Some(f) if isAnchoredFile(f) =>
-          loadFile(f)
-          fileStartOffset = o.fileStart
-        case Some(_) =>
-          // the anchored file is gone (EOF action rotated it; a
-          // same-named file with different bytes counts as gone):
-          // whatever file comes next — found now or triggers later —
-          // begins at the recovered row count. Set the base
-          // unconditionally: if it waited for a file to be found, a
-          // successor arriving after the restart would still see base
-          // 0 and be rotated away unplayed by the `s >= base + rows`
-          // check.
-          fileStartOffset = o.totalRows
-          ensureFile()
-        case None =>
-          // between files at checkpoint time: the offset still records
-          // where the next file must begin — restoring it keeps the
-          // rotate check from firing against a file that never played
-          fileStartOffset = math.max(fileStartOffset, o.fileStart)
-      }
-    }
-  }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(cfg.chunkSize)
 
@@ -420,99 +329,20 @@ class CsvPlaybackMicroBatchStream(cfg: PlaybackConfig)
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val so = start.asInstanceOf[PlaybackOffset]
     if (CsvPlaybackStream.quiesce.get()) return so // teardown drain
-    val s = so.totalRows
-    anchorFromOffset(so) // recovery: restore state before the rotate check
-    // EOF post-processing: the previous trigger finished the file (all
-    // its rows are planned and, since triggers are sequential, already
-    // processed). The reference deletes/renames eagerly at EOF too
-    // (csvplayback.py:442-465) — not transactional across restarts, by
-    // design.
-    if (!replay && currentFile.isDefined && s >= fileStartOffset + fileRows)
-      postProcessCurrentFile(s)
-    ensureFile()
-    if (currentFile.isEmpty || fileRows == 0)
-      return PlaybackOffset(s, currentFile, fileStartOffset, fileBytes)
-    // Wall-clock admission: rate enforcement is a property of the
-    // source, not of the trigger cadence. Without this gate the rate
-    // contract depended on the writer's trigger matching `paceSec`
-    // exactly — a faster trigger silently over-emitted (a continuous
-    // stream at trigger 10 ms pumped 100 chunks/sec), and a micro-batch
-    // cycle that overran the trigger interval ALIASED throughput to the
-    // next interval boundary (a 510 ms cycle under ProcessingTime(500)
-    // halves 1M rows/sec to 500k — the round-6/7 bench regression).
-    // Exactly one chunk is released per due tick; a tick that passes
-    // while the engine is busy is SKIPPED, never banked, so a backlog
-    // can never burst above the configured rate and a micro-batch never
-    // exceeds the reference's per-burst row budget (csvplayback.py:
-    // 294-318). Throughput is min(sampleRate, engine capability) under
-    // any trigger.
-    val paceNanos = math.max(1L, (cfg.paceSec * 1e9).toLong)
-    val now = System.nanoTime()
-    if (paceStartNanos == Long.MinValue) paceStartNanos = now
-    val due = (now - paceStartNanos) / paceNanos + 1
-    if (chunksGranted >= due)
-      return PlaybackOffset(s, currentFile, fileStartOffset, fileBytes)
-    chunksGranted = math.max(chunksGranted + 1, due) // missed ticks skip
+    queue.poll(so)
+    // the pace schedule anchors at the first trigger with rows to play
+    if (queue.rows == 0 || !pacer.grant()) return queue.offset(so.totalRows)
     val budget = limit match {
       case r: ReadMaxRows => r.maxRows()
       case _ => cfg.chunkSize.toLong
     }
     lastEmitMicros = System.currentTimeMillis() * 1000L
-    val next =
-      if (replay) s + budget // endless: wraps around the file in planInputPartitions
-      else math.min(s + budget, fileStartOffset + fileRows)
-    PlaybackOffset(next, currentFile, fileStartOffset, fileBytes)
+    queue.grant(so.totalRows, budget)
   }
 
-  private def postProcessCurrentFile(totalNow: Long): Unit = {
-    val p = java.nio.file.Paths.get(currentFile.get)
-    cfg.postProcessMethod match {
-      case PostProcess.Delete => java.nio.file.Files.deleteIfExists(p)
-      case PostProcess.Rename =>
-        java.nio.file.Files.move(p,
-          p.resolveSibling(p.getFileName.toString + cfg.suffixName))
-      case PostProcess.ContinuePlaying => // unreachable (replay)
-    }
-    currentFile = None
-    fileStartOffset = totalNow
-    fileRows = 0L
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val eo = end.asInstanceOf[PlaybackOffset]
-    val s = start.asInstanceOf[PlaybackOffset].totalRows
-    val e = eo.totalRows
-    if (e <= s) return Array.empty
-    // Checkpoint recovery: a batch whose offsets are already in the WAL
-    // but whose commit is missing re-executes here BEFORE any
-    // latestOffset call, on a freshly constructed source with no file
-    // state — re-anchor from the end offset (its rows all belong to the
-    // end offset's file) or the replayed batch silently emits zero rows
-    // and the uncommitted range is lost forever.
-    anchorFromOffset(eo)
-    if (currentFile.isEmpty) ensureFile() // anchorless initial offsets
-    if (currentFile.isEmpty || fileRows == 0) return Array.empty
-    // Recovery where the recovered range does not lie inside the
-    // current file: rows before fileStartOffset lived in a file the
-    // EOF action already deleted/renamed (s < fileStartOffset happens
-    // when the anchor re-based a successor file at the recovered
-    // count), rows at/after fileStartOffset + fileRows belong to a
-    // later file — either way the range is unrecoverable by design
-    // (the reference post-processes eagerly too); emit nothing rather
-    // than the wrong rows.
-    if (s < fileStartOffset) return Array.empty
-    if (!replay && s - fileStartOffset >= fileRows) return Array.empty
-    // Clamp the end too: a recovered range can extend past the current
-    // file's rows if the file shrank between WAL write and recovery
-    // (truncation the identity check can't see, e.g. same-size rewrite
-    // is excluded but a shorter file is not). Without the clamp the
-    // `% fileRows` wrap below would re-emit rows from the top of the
-    // file inside a single non-replay batch.
-    val eEff = if (replay) e else math.min(e, fileStartOffset + fileRows)
-    val emitTs = if (lastEmitMicros == 0) System.currentTimeMillis() * 1000L else lastEmitMicros
-    CsvPlaybackStream.planPartitions(currentFile.get, lineIndex,
-      CsvPlaybackStream.dataStartLine(cfg), fileRows, fileStartOffset, s, eEff, emitTs)
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    queue.partitions(start.asInstanceOf[PlaybackOffset].totalRows, end.asInstanceOf[PlaybackOffset],
+      if (lastEmitMicros == 0) System.currentTimeMillis() * 1000L else lastEmitMicros)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PlaybackReaderFactory()
@@ -520,7 +350,7 @@ class CsvPlaybackMicroBatchStream(cfg: PlaybackConfig)
   override def commit(end: Offset): Unit = ()
   // note: MicroBatchExecution only calls commit() when a NEXT batch is
   // constructed, so EOF actions cannot live here — they'd never fire for
-  // the final batch; see latestOffset.
+  // the final batch; see FileQueue.poll.
 
   override def deserializeOffset(json: String): Offset =
     PlaybackOffset.parse(json)

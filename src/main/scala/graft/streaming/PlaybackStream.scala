@@ -43,11 +43,13 @@ object PlaybackStream {
     cfg.columnMethod match {
       case ColumnMethod.Explicit =>
         cfg.parsedUseColumns.names
-      case ColumnMethod.PickFromFile =>
-        val headerIdx = CsvPlaybackStream.headerSkip(cfg) + cfg.rowIndexForColumnNames
-        PlaybackIO.headLines(path, headerIdx + 1).last.split(",", -1).toSeq
+      case ColumnMethod.PickFromFile => columnNamesLine(cfg, path).split(",", -1).toSeq
     }
   }
+
+  /** The line of `path` that names the columns in PickFromFile mode. */
+  def columnNamesLine(cfg: PlaybackConfig, path: String): String =
+    PlaybackIO.headLines(path, CsvPlaybackStream.headerSkip(cfg) + cfg.rowIndexForColumnNames + 1).last
 
   /** The parsed playback stream. For fixed-column modes: one column per
     * datapoint (+ row_idx/emit_ts carried through); ragged mode: the
@@ -55,10 +57,8 @@ object PlaybackStream {
   def readings(spark: SparkSession, cfg0: PlaybackConfig): DataFrame = {
     val cfg = cfg0.validated
     val dir = PlaybackConfig.resolveDataDir(cfg.csvDirName)
-    val file = PlaybackConfig.matchingFiles(java.nio.file.Paths.get(dir), cfg.csvFileName)
-      .headOption.getOrElse(
-        throw new java.io.FileNotFoundException(s"no csv matching '${cfg.csvFileName}' in $dir"))
-      .toString
+    val file = FileQueue.first(dir, cfg.csvFileName).getOrElse(
+      throw new java.io.FileNotFoundException(s"no csv matching '${cfg.csvFileName}' in $dir"))
     applyTimestampStyle(spark, cfg, withReportNaN(parse(spark, cfg, file, raw(spark, cfg)), cfg),
       file)
   }

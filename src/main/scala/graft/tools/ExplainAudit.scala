@@ -3,10 +3,13 @@ package graft.tools
 import graft.QueryRegistry
 
 /** Plan audit (dev tool): for each registry query, summarize the
-  * physical plan — parquet pushed filters, read schema width, join
-  * strategies, exchange count, whole-stage codegen coverage. The
+  * physical plan — join strategies, exchange count, whole-stage codegen
+  * coverage, parquet scans, nested-loop and global-window lints. The
   * things that must look right before believing a plan scales to
   * 100 TB. The first output line names the cores and the dataset.
+  * Arguments `[names [outDir]]`: `names`, a comma list of substrings,
+  * keeps the queries whose name holds one; with `outDir`, each audited
+  * query's final plan, formatted, goes to `<outDir>/<query>.txt`.
   */
 object ExplainAudit {
 
@@ -160,12 +163,27 @@ object ExplainAudit {
     walk(root)
   }
 
+  /** The final physical plan of `df`, as text. Executes the physical plan
+    * DIRECTLY: foreach/count wrap the dataframe in their own plan, leaving
+    * this one isFinalPlan=false — the audit would then read the static
+    * AQE plan (no whole-stage-codegen markers, no runtime join
+    * conversions). executedPlan.execute() runs the
+    * AdaptiveSparkPlanExec itself (finalizing it) without
+    * materializing corpus-sized output on the driver (t19/t20
+    * are per-doc). A finalized AdaptiveSparkPlan prints the final plan
+    * AND an "== Initial Plan ==" section — keep only the former. */
+  def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
+    df.queryExecution.executedPlan.execute().foreach(_ => ())
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = graft.Session.sfDir
     val spark = graft.Session.local(cpus = Cores)
     println(s"# explain_audit cores=$Cores sf_dir=$sfDir")
     spark.sparkContext.setLogLevel("ERROR")
-    val only = args.headOption
+    val only = args.headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val outDir = args.lift(1).map(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     // capture one representative PRE-checkpoint round body per
     // iterative operator while the registry queries run (see
     // operators.IterTrace) — localCheckpoint severs lineage, so
@@ -173,26 +191,14 @@ object ExplainAudit {
     // 10-iteration job
     graft.operators.IterTrace.enable()
     QueryRegistry.all
-      .filter(q => only.forall(q.name.contains))
+      .filter(q => only.forall(_.exists(q.name.contains)))
       .foreach { q =>
         try {
           val df = q.impl(spark, sfDir)
-          // Execute the physical plan DIRECTLY: foreach/count wrap the
-          // dataframe in their own plan, leaving this one
-          // isFinalPlan=false — the audit would then read the static
-          // AQE plan (no whole-stage-codegen markers, no runtime join
-          // conversions). executedPlan.execute() runs the
-          // AdaptiveSparkPlanExec itself (finalizing it) without
-          // materializing corpus-sized output on the driver (t19/t20
-          // are per-doc).
-          df.queryExecution.executedPlan.execute().foreach(_ => ())
-          // a finalized AdaptiveSparkPlan prints the final plan AND an
-          // "== Initial Plan ==" section — count only the former
-          val plan = df.queryExecution.executedPlan.toString
-            .split("== Initial Plan ==").head
+          val plan = finalPlan(df)
           def n(pat: String) = pat.r.findAllIn(plan).length
-          val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan)
-            .filterNot(_ == "PushedFilters: []").mkString(" | ")
+          outDir.foreach(d => java.nio.file.Files.writeString(d.resolve(s"${q.name}.txt"),
+            df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)))
           val wins = unboundedGlobalWindows(df.queryExecution.executedPlan)
           val (waived, winViolations) =
             if (singleFileCliContract(q.name)) (wins, Nil) else (Nil, wins)
@@ -217,14 +223,6 @@ object ExplainAudit {
           waived.foreach(w => println(
             s"   window waived (single-file CLI contract) in ${q.name}: " +
             w.verboseString(2).linesIterator.next()))
-          if (pushed.nonEmpty && args.length > 1) println(s"   $pushed")
-          if (args.length > 1 && args(1) == "tree") {
-            def dump(p: SparkPlan, d: Int): Unit = {
-              println("   " + ("  " * d) + p.getClass.getSimpleName)
-              kids(p).foreach(dump(_, d + 1))
-            }
-            dump(df.queryExecution.executedPlan, 0)
-          }
         } catch {
           case e: Throwable => println(s"${q.name}: EXPLAIN FAILED ${e.getMessage}")
         }
@@ -233,7 +231,7 @@ object ExplainAudit {
     // cc_minlabel (the one iterative op no registry query drives — the
     // gated queries use the large/small-star variant) runs on a small
     // synthetic chain-with-islands graph just to capture its round body
-    if (only.forall("cc_minlabel".contains)) {
+    if (only.forall(_.exists("cc_minlabel".contains))) {
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val edges = ((0L to 40L).sliding(2).map(p => (p.head, p.last)).toSeq ++
@@ -247,8 +245,8 @@ object ExplainAudit {
     graft.operators.IterTrace.expected.toSeq.sortBy(_._1).foreach {
       case (tag, drivenBy) =>
         // with a name filter, only tags whose driving query ran apply
-        val applies = only.forall(f => drivenBy.contains(f) ||
-          tag.contains(f) || captured.contains(tag))
+        val applies = only.forall(_.exists(f => drivenBy.contains(f) || tag.contains(f)) ||
+          captured.contains(tag))
         if (applies) captured.get(tag) match {
           case None =>
             println(s"iter:$tag EXPLAIN FAILED round body never captured " +
@@ -258,9 +256,7 @@ object ExplainAudit {
               // same finalize-then-lint protocol as the query rows; the
               // round body's parents are checkpointed, so this executes
               // exactly one representative iteration
-              df.queryExecution.executedPlan.execute().foreach(_ => ())
-              val plan = df.queryExecution.executedPlan.toString
-                .split("== Initial Plan ==").head
+              val plan = finalPlan(df)
               def n(pat: String) = pat.r.findAllIn(plan).length
               val wins = unboundedGlobalWindows(df.queryExecution.executedPlan)
               val (smallNlj, badNlj) =

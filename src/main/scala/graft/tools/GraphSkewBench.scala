@@ -76,10 +76,7 @@ object GraphSkewBench {
     }
     // per-iteration body of the skewed run: join strategies + AQE skew
     val iterPlan = graft.operators.IterTrace.captured.get("pagerank")
-      .map { df =>
-        df.queryExecution.executedPlan.execute().foreach(_ => ())
-        df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-      }.getOrElse("")
+      .map(ExplainAudit.finalPlan).getOrElse("")
     def n(plan: String, pat: String) = pat.r.findAllIn(plan).length
     graft.operators.IterTrace.disable()
 

@@ -135,4 +135,28 @@ class CsvPlaybackSpec extends SparkSpec {
     val found = PlaybackConfig.matchingFiles(dir, "vib").map(_.getFileName.toString)
     assert(found == Seq("a_vib.csv", "b_vib.csv", "c_vib.csv.gz"))
   }
+
+  test("a queued file whose header drifts from the first file's stops the stream") {
+    val dir = java.nio.file.Files.createTempDirectory("drift")
+    val a = dir.resolve("a_vib.csv")
+    val b = dir.resolve("b_vib.csv")
+    java.nio.file.Files.writeString(a, "c1,c2\n1,10\n2,20\n")
+    java.nio.file.Files.writeString(b, "c1,c3\n3,30\n")
+    val cfg = PlaybackConfig(csvDirName = dir.toString, csvFileName = "vib",
+      postProcessMethod = PostProcess.Delete)
+    val q = graft.streaming.PlaybackStream.readings(spark, cfg)
+      .writeStream.format("memory").queryName("drift")
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(10)).start()
+    try {
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination(180000)
+      }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      val drift = messages(ex).find(_.contains("header drift"))
+      assert(drift.exists(m => Seq(a.toString, b.toString, "'c1,c2'", "'c1,c3'").forall(m.contains)),
+        s"the failure names both files and headers: ${messages(ex)}")
+      assert(spark.sql("SELECT c1 FROM drift").count() == 2, "the first file played in full")
+    } finally if (q.isActive) q.stop()
+  }
 }

@@ -14,7 +14,10 @@ import scala.jdk.CollectionConverters._
   * line's fields in one place: the one-pass kernel in
   * `PlaybackStream.parse`, in front of `PlaybackStream.parseLine`. Only
   * `Playback` names the checkpoint file manager conf, which it sets
-  * around its own starts. Pure file scan, no SparkSession needed. */
+  * around its own starts. The DSv2 stream class reads no clock and no
+  * file system itself: pacing is the `Pacer`'s and the file queue the
+  * `FileQueue`'s, whose finder is the one pick of the file that plays.
+  * Pure file scan, no SparkSession needed. */
 class ReaderGuardSpec extends AnyFunSuite {
 
   private def sources(dirs: String*): Seq[(java.nio.file.Path, String)] =
@@ -86,5 +89,23 @@ class ReaderGuardSpec extends AnyFunSuite {
       case (p, text) if code(text).contains(key) && !p.endsWith("streaming/Playback.scala") => p
     }
     assert(hits.isEmpty, s"the manager conf named outside Playback: $hits")
+  }
+
+  test("the DSv2 stream class names neither the clock nor java.nio.file") {
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/CsvPlaybackStream.scala"))
+    val start = text.indexOf("class CsvPlaybackMicroBatchStream(")
+    assert(start >= 0, "CsvPlaybackMicroBatchStream is gone")
+    val body = code(text.substring(start, text.indexOf("\n}\n", start)))
+    val hits = Seq("System.nanoTime", "java.nio.file.Files").filter(body.contains)
+    assert(hits.isEmpty, s"the adapter reads $hits itself")
+    assert(!code(text).contains("import java.nio"), "java.nio imported into the stream file")
+  }
+
+  test("PlaybackConfig.matchingFiles has exactly one caller in src/main") {
+    val callers = sources("src/main/scala").flatMap { case (p, text) =>
+      Seq.fill(calls(text, "matchingFiles("))(p.getFileName.toString)
+    }
+    assert(callers == Seq("PlaybackCore.scala"), s"callers of matchingFiles: $callers")
   }
 }
