@@ -2,10 +2,9 @@ package graft
 
 import graft.config.{Enums, PlaybackConfig}
 import Enums._
-import graft.streaming.PlaybackStream
+import graft.streaming.Playback
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import scala.collection.immutable.ListMap
 
@@ -303,15 +302,7 @@ object PlaybackBench {
           ingestMode = IngestMode.Burst, sampleRate = rate,
           burstInterval = 500,
           postProcessMethod = PostProcess.ContinuePlaying)
-        // poll faster than the 500 ms pace: the source's wall-clock
-        // admission governs the cadence (one 500k burst per 500 ms);
-        // a 100 ms trigger just bounds the release quantization, and a
-        // batch that overruns one tick no longer aliases throughput to
-        // the next 500 ms trigger boundary (the r6/r7 half-rate cliff)
-        started += PlaybackStream.readings(spark, cfg)
-          .writeStream.format("noop")
-          .trigger(Trigger.ProcessingTime(100))
-          .start()
+        started += Playback.startTo(spark, cfg, "noop")
       }
       // warmup = every stream flowing, not a fixed sleep: startup is
       // serialized per query (line-index job, plan compile, WAL

@@ -149,11 +149,8 @@ object CleanCsv {
     * median of the ≤2 non-null values is exactly their mean, so the
     * mean form is semantics-preserving (and codegen-friendly). */
   def rollingMedianFill(df: DataFrame, colName: String,
-      seriesKeys: Seq[Column] = Nil): DataFrame = {
-    val c = blanksToNull(col(colName)).cast("double")
-    val w = orderedW(seriesKeys).rowsBetween(-1, 0)
-    df.withColumn(colName, coalesce(c, avg(c).over(w)))
-  }
+      seriesKeys: Seq[Column] = Nil): DataFrame =
+    rollingMeanFill(df, colName, seriesKeys)
 
   /** K5 (PD:76,81,141-144): the preprocessing CLI's CSV output — one
     * header, data appended. Spark writes a directory of parts; headers

@@ -58,7 +58,7 @@ final class FileQueue(cfg: PlaybackConfig,
       index: CsvPlaybackStream.FileLineIndex, rows: Long)
   private var current: Option[Loaded] = None
   private var fileStart: Long = 0L // totalRows when the current (or next) file began
-  private var firstHeader: Option[(String, String)] = None
+  private var firstShape: Option[(String, String)] = None
 
   /** Data rows of the current file; 0 with no file. */
   def rows: Long = current.fold(0L)(_.rows)
@@ -124,24 +124,37 @@ final class FileQueue(cfg: PlaybackConfig,
   /** Loads `f` as the current file: builds its line index and derives the
     * data-row count. The single entry point for file state, shared by
     * fresh pickup ([[ensureFile]]) and checkpoint recovery
-    * ([[anchorFromOffset]]). In PickFromFile mode a file that names other
-    * columns than the first one loaded fails the query: the stream's
-    * schema was resolved from one file, and splitting another against it
-    * would drift silently. */
+    * ([[anchorFromOffset]]). In the fixed-column modes a file whose
+    * [[shape]] differs from the first one loaded fails the query: the
+    * stream's schema was resolved from one file, and splitting another
+    * against it would drift silently. */
   private def load(f: String): Unit = {
     val index = buildIndex(f)
-    if (!cfg.variableCols && cfg.columnMethod == ColumnMethod.PickFromFile) {
-      val header = PlaybackStream.columnNamesLine(cfg, f)
-      val (f0, h0) = firstHeader.getOrElse((f, header))
-      require(h0 == header, s"header drift in the file queue: $f has columns " +
-        s"'$header', but $f0, the first file this source played, has '$h0'")
-      firstHeader = Some((f0, h0))
+    shape(f).foreach { s =>
+      val (f0, s0) = firstShape.getOrElse((f, s))
+      require(s0 == s, s"header drift in the file queue: $f has $s, " +
+        s"but $f0, the first file this source played, has $s0")
+      firstShape = Some((f0, s0))
     }
     val bytes =
       try java.nio.file.Files.size(java.nio.file.Paths.get(f))
       catch { case _: java.io.IOException => -1L }
     current = Some(Loaded(f, bytes, index, index.dataRows(dataStart)))
   }
+
+  /** The columns `f` offers the stream's schema: in PickFromFile mode the
+    * line that names them; in Explicit mode the field count of the line
+    * pandas' `header=0` consumes (None if `f` is too short to hold it).
+    * None in ragged mode, which has no fixed columns. */
+  private def shape(f: String): Option[String] =
+    if (cfg.variableCols) None
+    else cfg.columnMethod match {
+      case ColumnMethod.PickFromFile => Some(s"columns '${PlaybackStream.columnNamesLine(cfg, f)}'")
+      case ColumnMethod.Explicit =>
+        val skip = CsvPlaybackStream.headerSkip(cfg)
+        PlaybackIO.headLines(f, skip + 1).lift(skip)
+          .map(l => s"${l.split(",", -1).length} fields on line ${skip + 1}")
+    }
 
   private def ensureFile(): Unit = {
     if (current.isEmpty) FileQueue.first(dir, cfg.csvFileName).foreach(load)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -65,7 +65,42 @@ object StatefulOps {
       horizonMicros: Long): Unit =
     state.setTimeoutTimestamp(math.max(
       Math.addExact(lastEventMicros / 1000L, horizonMicros / 1000L),
-      state.getCurrentWatermarkMs + 1))
+      state.getCurrentWatermarkMs() + 1))
+
+  /** The one keyed-state loop of the event-time stateful operators
+    * below: groups `input` by `keyOf` and runs the operator's per-key
+    * logic under the idle-eviction protocol above. A key whose timeout
+    * fires emits `closeOut(key, state)` (nothing by default) and its
+    * state is removed. Otherwise `step(key, rows, state)` returns the
+    * rows to emit, the state to store (`None` stores and arms nothing)
+    * and the event time the idle timeout arms from (`Long.MinValue`:
+    * do not arm). */
+  private def perKey[K, V: Encoder, S: Encoder, O: Encoder](input: Dataset[V],
+      keyOf: V => K, keyEnc: Encoder[K], idleHorizonMicros: Option[Long], delay: String,
+      closeOut: (K, S) => Iterator[O] = (_: K, _: S) => Iterator.empty)(
+      step: (K, Iterator[V], Option[S]) => (Iterator[O], Option[S], Long)): Dataset[O] = {
+    val (src, timeoutConf) = idleHorizonMicros match {
+      case Some(h) =>
+        require(h > 0, s"idleHorizonMicros=$h must be positive")
+        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
+      case None => (input, GroupStateTimeout.NoTimeout)
+    }
+    src.groupByKey(keyOf)(keyEnc).flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      (key: K, rows: Iterator[V], gs: GroupState[S]) =>
+        if (gs.hasTimedOut) {
+          val out = closeOut(key, gs.get)
+          gs.remove()
+          out
+        } else {
+          val (out, next, armAt) = step(key, rows, gs.getOption)
+          next.foreach { s =>
+            gs.update(s)
+            if (armAt != Long.MinValue)
+              idleHorizonMicros.foreach(h => armIdleTimeout(gs, armAt, h))
+          }
+          out
+        })
+  }
 
   /** Emits a [[Gap]] whenever consecutive readings of a key are more
     * than `maxGapMicros` apart — the sensor-dropout detector a playback
@@ -84,35 +119,18 @@ object StatefulOps {
     implicit val gapEnc = Encoders.product[Gap]
     implicit val longEnc = Encoders.scalaLong
     implicit val keyedEnc = Encoders.product[Keyed]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
+    perKey[String, Keyed, Long, Gap](input, _.key, Encoders.STRING, idleHorizonMicros,
+        delay) { (key, rows, prev) =>
+      val sorted = rows.toSeq.sortBy(r => r.tsMicros)
+      var last = prev.getOrElse(Long.MinValue)
+      val gaps = Seq.newBuilder[Gap]
+      sorted.foreach { r =>
+        if (last != Long.MinValue && r.tsMicros - last > maxGapMicros)
+          gaps += Gap(key, last, r.tsMicros, r.tsMicros - last)
+        last = math.max(last, r.tsMicros)
+      }
+      (gaps.result().iterator, Some(last).filter(_ != Long.MinValue), last)
     }
-    src
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (key: String, rows: Iterator[Keyed], state: GroupState[Long]) => {
-          if (state.hasTimedOut) {
-            state.remove() // idle past horizon: decommissioned, no gap to report
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => r.tsMicros)
-            var last = if (state.exists) state.get else Long.MinValue
-            val gaps = Seq.newBuilder[Gap]
-            sorted.foreach { r =>
-              if (last != Long.MinValue && r.tsMicros - last > maxGapMicros)
-                gaps += Gap(key, last, r.tsMicros, r.tsMicros - last)
-              last = math.max(last, r.tsMicros)
-            }
-            if (last != Long.MinValue) {
-              state.update(last)
-              idleHorizonMicros.foreach(h => armIdleTimeout(state, last, h))
-            }
-            gaps.result().iterator
-          }
-        })
   }
 
   /** Adapter: a playback readings frame → [[Keyed]] dataset. The
@@ -283,49 +301,34 @@ object StatefulOps {
     implicit val stEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     implicit val keyedEnc = Encoders.product[Keyed]
     val microsPerDay = 86400L * 1000000L
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
+    perKey[String, Keyed, (Long, Long), Streak](input, _.key, Encoders.STRING,
+        idleHorizonMicros, delay,
+        // horizon of silence ⇒ the open streak is finished: emit it
+        // closed, then drop the key (emit-and-drop close-out)
+        closeOut = { case (key, (start, lastDay)) =>
+          Iterator.single(Streak(key, start, lastDay, lastDay - start + 1)) }) {
+      (key, rows, prev) =>
+        val days = rows.map(r => Math.floorDiv(r.tsMicros, microsPerDay))
+          .toSeq.distinct.sorted
+        val closed = Seq.newBuilder[Streak]
+        var st = prev.orNull
+        days.foreach { d =>
+          if (st == null) st = (d, d)
+          else if (d > st._2 + 1) {
+            closed += Streak(key, st._1, st._2, st._2 - st._1 + 1)
+            st = (d, d)
+          } else if (d > st._2) st = (st._1, d)
+          // d <= last active day: already counted (or late) — ignore
+        }
+        // anchor at the END of the last active day, not its
+        // start: day-start anchoring would shorten the horizon
+        // by up to ~24h of real silence (an event at 23:59 of
+        // day D armed from D_start could close a streak the
+        // day-D+1 event was about to extend). End-of-day errs
+        // ≤1 day LONGER than configured, never shorter.
+        (closed.result().iterator, Option(st),
+          if (st == null) Long.MinValue else (st._2 + 1) * microsPerDay)
     }
-    src
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (key: String, rows: Iterator[Keyed], state: GroupState[(Long, Long)]) => {
-          if (state.hasTimedOut) {
-            // horizon of silence ⇒ the open streak is finished: emit it
-            // closed, then drop the key (emit-and-drop close-out)
-            val (start, lastDay) = state.get
-            state.remove()
-            Iterator.single(Streak(key, start, lastDay, lastDay - start + 1))
-          } else {
-            val days = rows.map(r => Math.floorDiv(r.tsMicros, microsPerDay))
-              .toSeq.distinct.sorted
-            val closed = Seq.newBuilder[Streak]
-            var st = if (state.exists) state.get else null
-            days.foreach { d =>
-              if (st == null) st = (d, d)
-              else if (d > st._2 + 1) {
-                closed += Streak(key, st._1, st._2, st._2 - st._1 + 1)
-                st = (d, d)
-              } else if (d > st._2) st = (st._1, d)
-              // d <= last active day: already counted (or late) — ignore
-            }
-            if (st != null) {
-              state.update(st)
-              // anchor at the END of the last active day, not its
-              // start: day-start anchoring would shorten the horizon
-              // by up to ~24h of real silence (an event at 23:59 of
-              // day D armed from D_start could close a streak the
-              // day-D+1 event was about to extend). End-of-day errs
-              // ≤1 day LONGER than configured, never shorter.
-              idleHorizonMicros.foreach(h =>
-                armIdleTimeout(state, (st._2 + 1) * microsPerDay, h))
-            }
-            closed.result().iterator
-          }
-        })
   }
 
   final case class SourcedDoc(source: String, docId: Long, nTokens: Long,
@@ -396,36 +399,20 @@ object StatefulOps {
     implicit val outEnc = Encoders.product[BudgetedDoc]
     implicit val stEnc = Encoders.scalaLong
     implicit val inEnc = Encoders.product[SourcedDoc]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
+    perKey[String, SourcedDoc, Long, BudgetedDoc](input, _.source, Encoders.STRING,
+        idleHorizonMicros, delay) { (source, rows, prev) =>
+      var used = prev.getOrElse(0L)
+      val admitted = Seq.newBuilder[BudgetedDoc]
+      var lastTs = Long.MinValue
+      rows.toSeq.sortBy(_.docId).foreach { d =>
+        lastTs = math.max(lastTs, d.tsMicros)
+        if (used + d.nTokens <= budgetTokens) {
+          used += d.nTokens
+          admitted += BudgetedDoc(source, d.docId, d.nTokens, used)
+        } // over budget: skip, leave remaining budget for smaller docs
+      }
+      (admitted.result().iterator, Some(used), lastTs)
     }
-    src
-      .groupByKey(_.source)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (source: String, rows: Iterator[SourcedDoc], state: GroupState[Long]) => {
-          if (state.hasTimedOut) {
-            state.remove() // dormant source: budget re-opens on return
-            Iterator.empty
-          } else {
-            var used = if (state.exists) state.get else 0L
-            val admitted = Seq.newBuilder[BudgetedDoc]
-            var lastTs = Long.MinValue
-            rows.toSeq.sortBy(_.docId).foreach { d =>
-              lastTs = math.max(lastTs, d.tsMicros)
-              if (used + d.nTokens <= budgetTokens) {
-                used += d.nTokens
-                admitted += BudgetedDoc(source, d.docId, d.nTokens, used)
-              } // over budget: skip, leave remaining budget for smaller docs
-            }
-            state.update(used)
-            if (lastTs != Long.MinValue)
-              idleHorizonMicros.foreach(h => armIdleTimeout(state, lastTs, h))
-            admitted.result().iterator
-          }
-        })
   }
 
   /** Watermarked stream-stream interval join: each left row pairs with
@@ -487,46 +474,29 @@ object StatefulOps {
     implicit val stEnc = Encoders.tuple(Encoders.scalaLong,
       Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong)
     implicit val evEnc = Encoders.product[Scd2Event]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
-    }
-    src
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (key: String, rows: Iterator[Scd2Event],
-            gs: GroupState[(Long, String, Long, Long)]) => {
-          if (gs.hasTimedOut) {
-            val open = gs.get
-            gs.remove()
-            Iterator.single(Scd2Interval(key, open._1, open._2, open._3,
-              Long.MaxValue, open._4)) // open-ended close-out marker
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
-            val closed = Seq.newBuilder[Scd2Interval]
-            var open = if (gs.exists) gs.get else null
-            var lastTs = Long.MinValue
-            sorted.foreach { r =>
-              lastTs = math.max(lastTs, r.tsMicros)
-              if (open == null) open = (1L, r.state, r.tsMicros, 1L)
-              else if (r.state == open._2)
-                open = open.copy(_4 = open._4 + 1)
-              else {
-                closed += Scd2Interval(key, open._1, open._2, open._3,
-                  r.tsMicros, open._4)
-                open = (open._1 + 1, r.state, r.tsMicros, 1L)
-              }
-            }
-            if (open != null) {
-              gs.update(open)
-              if (lastTs != Long.MinValue)
-                idleHorizonMicros.foreach(h => armIdleTimeout(gs, lastTs, h))
-            }
-            closed.result().iterator
+    perKey[String, Scd2Event, (Long, String, Long, Long), Scd2Interval](input, _.key,
+        Encoders.STRING, idleHorizonMicros, delay,
+        // valid_to = Long.MaxValue: the open-ended close-out marker
+        closeOut = (key, open) => Iterator.single(Scd2Interval(key, open._1, open._2,
+          open._3, Long.MaxValue, open._4))) {
+      (key, rows, prev) =>
+        val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
+        val closed = Seq.newBuilder[Scd2Interval]
+        var open = prev.orNull
+        var lastTs = Long.MinValue
+        sorted.foreach { r =>
+          lastTs = math.max(lastTs, r.tsMicros)
+          if (open == null) open = (1L, r.state, r.tsMicros, 1L)
+          else if (r.state == open._2)
+            open = open.copy(_4 = open._4 + 1)
+          else {
+            closed += Scd2Interval(key, open._1, open._2, open._3,
+              r.tsMicros, open._4)
+            open = (open._1 + 1, r.state, r.tsMicros, 1L)
           }
-        })
+        }
+        (closed.result().iterator, Option(open), lastTs)
+    }
   }
 
   final case class TouchEvent(key: String, tsMicros: Long, eventId: Long,
@@ -558,44 +528,25 @@ object StatefulOps {
     implicit val outEnc = Encoders.product[Attribution]
     implicit val stEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
     implicit val evEnc = Encoders.product[TouchEvent]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
+    perKey[String, TouchEvent, (String, String), Attribution](input, _.key,
+        Encoders.STRING, idleHorizonMicros, delay) { (key, rows, prev) =>
+      val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
+      val out = Seq.newBuilder[Attribution]
+      var st = prev.orNull
+      var lastTs = Long.MinValue
+      sorted.foreach { r =>
+        lastTs = math.max(lastTs, r.tsMicros)
+        if (r.eventType == purchaseType) {
+          val (f, l) = if (st == null) ("direct", "direct") else st
+          out += Attribution(key, r.tsMicros, r.eventId, f, l,
+            math.round(r.value * 100))
+        } else {
+          st = if (st == null) (r.eventType, r.eventType)
+               else (st._1, r.eventType)
+        }
+      }
+      (out.result().iterator, Option(st), lastTs)
     }
-    src
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (key: String, rows: Iterator[TouchEvent],
-            gs: GroupState[(String, String)]) => {
-          if (gs.hasTimedOut) {
-            gs.remove() // attribution window expired: no credit carries over
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
-            val out = Seq.newBuilder[Attribution]
-            var st = if (gs.exists) gs.get else null
-            var lastTs = Long.MinValue
-            sorted.foreach { r =>
-              lastTs = math.max(lastTs, r.tsMicros)
-              if (r.eventType == purchaseType) {
-                val (f, l) = if (st == null) ("direct", "direct") else st
-                out += Attribution(key, r.tsMicros, r.eventId, f, l,
-                  math.round(r.value * 100))
-              } else {
-                st = if (st == null) (r.eventType, r.eventType)
-                     else (st._1, r.eventType)
-              }
-            }
-            if (st != null) {
-              gs.update(st)
-              if (lastTs != Long.MinValue)
-                idleHorizonMicros.foreach(h => armIdleTimeout(gs, lastTs, h))
-            }
-            out.result().iterator
-          }
-        })
   }
 
   final case class FunnelStage(key: String, stage: String, tsMicros: Long,
@@ -642,45 +593,25 @@ object StatefulOps {
     implicit val outEnc = Encoders.product[FunnelStage]
     implicit val stEnc = Encoders.product[FunnelTimes]
     implicit val evEnc = Encoders.product[TouchEvent]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
+    perKey[String, TouchEvent, FunnelTimes, FunnelStage](input, _.key, Encoders.STRING,
+        idleHorizonMicros, delay) { (key, rows, prev) =>
+      val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
+      var times = prev.fold(Vector.empty[Long])(_.times.toVector)
+      val out = Seq.newBuilder[FunnelStage]
+      var lastTs = Long.MinValue
+      sorted.foreach { r =>
+        lastTs = math.max(lastTs, r.tsMicros)
+        val i = times.length
+        if (i < stages.length && r.eventType == stages(i) &&
+            (i == 0 || (r.tsMicros >= times(i - 1) &&
+              r.tsMicros <= times(i - 1) + stepTimeoutMicros))) {
+          times = times :+ r.tsMicros
+          out += FunnelStage(key, s"${i + 1}_${stages(i)}",
+            r.tsMicros, r.eventId)
+        }
+      }
+      (out.result().iterator, Some(FunnelTimes(times)).filter(_.times.nonEmpty), lastTs)
     }
-    src
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (key: String, rows: Iterator[TouchEvent],
-            gs: GroupState[FunnelTimes]) => {
-          if (gs.hasTimedOut) {
-            gs.remove() // stage rows were emitted when reached
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
-            var times =
-              if (gs.exists) gs.get.times.toVector else Vector.empty[Long]
-            val out = Seq.newBuilder[FunnelStage]
-            var lastTs = Long.MinValue
-            sorted.foreach { r =>
-              lastTs = math.max(lastTs, r.tsMicros)
-              val i = times.length
-              if (i < stages.length && r.eventType == stages(i) &&
-                  (i == 0 || (r.tsMicros >= times(i - 1) &&
-                    r.tsMicros <= times(i - 1) + stepTimeoutMicros))) {
-                times = times :+ r.tsMicros
-                out += FunnelStage(key, s"${i + 1}_${stages(i)}",
-                  r.tsMicros, r.eventId)
-              }
-            }
-            if (times.nonEmpty) {
-              gs.update(FunnelTimes(times))
-              if (lastTs != Long.MinValue)
-                idleHorizonMicros.foreach(h => armIdleTimeout(gs, lastTs, h))
-            }
-            out.result().iterator
-          }
-        })
   }
 
   final case class DebouncedEvent(key: String, tsMicros: Long, eventId: Long)
@@ -706,37 +637,21 @@ object StatefulOps {
     implicit val outEnc = Encoders.product[DebouncedEvent]
     implicit val stEnc = Encoders.scalaLong
     implicit val evEnc = Encoders.product[TouchEvent]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h >= windowMicros,
-          s"idleHorizonMicros=$h must be >= windowMicros=$windowMicros " +
-            "(the eviction-invariance precondition)")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
+    idleHorizonMicros.foreach(h => require(h >= windowMicros,
+      s"idleHorizonMicros=$h must be >= windowMicros=$windowMicros " +
+        "(the eviction-invariance precondition)"))
+    perKey[String, TouchEvent, Long, DebouncedEvent](input, _.key, Encoders.STRING,
+        idleHorizonMicros, delay) { (key, rows, prev) =>
+      val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
+      var last = prev.getOrElse(Long.MinValue)
+      val out = Seq.newBuilder[DebouncedEvent]
+      sorted.foreach { r =>
+        if (last == Long.MinValue || r.tsMicros - last >= windowMicros)
+          out += DebouncedEvent(key, r.tsMicros, r.eventId)
+        last = math.max(last, r.tsMicros)
+      }
+      (out.result().iterator, Some(last).filter(_ != Long.MinValue), last)
     }
-    src
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (key: String, rows: Iterator[TouchEvent], gs: GroupState[Long]) => {
-          if (gs.hasTimedOut) {
-            gs.remove() // invariant: the next event is a chain head anyway
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
-            var last = if (gs.exists) gs.get else Long.MinValue
-            val out = Seq.newBuilder[DebouncedEvent]
-            sorted.foreach { r =>
-              if (last == Long.MinValue || r.tsMicros - last >= windowMicros)
-                out += DebouncedEvent(key, r.tsMicros, r.eventId)
-              last = math.max(last, r.tsMicros)
-            }
-            if (last != Long.MinValue) {
-              gs.update(last)
-              idleHorizonMicros.foreach(h => armIdleTimeout(gs, last, h))
-            }
-            out.result().iterator
-          }
-        })
   }
 
   final case class ZFlag(key: String, eventId: Long, value: Double,
@@ -789,60 +704,44 @@ object StatefulOps {
     implicit val outEnc = Encoders.product[ZFlag]
     implicit val stEnc = Encoders.product[ZWindow]
     implicit val evEnc = Encoders.product[TouchEvent]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
-    }
-    src
-      .groupByKey(_.key)(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (key: String, rows: Iterator[TouchEvent], gs: GroupState[ZWindow]) => {
-          if (gs.hasTimedOut) {
-            gs.remove() // stale distribution: re-warm before flagging
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
-            var buf = if (gs.exists) gs.get.values.toVector else Vector.empty[Long]
-            var lastTs = if (gs.exists) gs.get.lastTs else Long.MinValue
-            val out = Seq.newBuilder[ZFlag]
-            val cut = math.round(threshold * threshold * 1e6)
-            sorted.foreach { r =>
-              lastTs = math.max(lastTs, r.tsMicros)
-              val x2 = math.round(r.value * 100)
-              val n = buf.length.toLong
-              if (n >= minN) {
-                // Exact-integer kernel with LOUD overflow: the batch
-                // query escapes int64 through DECIMAL(38,0); this
-                // generic operator instead fails with ArithmeticException
-                // the moment deviation·window leaves the int64 domain
-                // (|x·n − Σx| ≳ 2.1e6 cents) rather than silently
-                // wrapping into wrong/dropped flags.
-                import java.lang.Math.{addExact, multiplyExact, subtractExact}
-                var s1 = 0L; var s2 = 0L
-                buf.foreach { v =>
-                  s1 = addExact(s1, v); s2 = addExact(s2, multiplyExact(v, v)) }
-                val varnum =
-                  subtractExact(multiplyExact(n, s2), multiplyExact(s1, s1))
-                if (varnum > 0) {
-                  val nn = subtractExact(multiplyExact(x2, n), s1)
-                  val z2e6 = addExact(
-                    multiplyExact(2000000L, multiplyExact(nn, nn)),
-                    varnum) / (2 * varnum)
-                  if (z2e6 > cut)
-                    out += ZFlag(key, r.eventId, roundHalfUp(r.value, 4),
-                      java.lang.Long.signum(nn), z2e6)
-                }
-              }
-              buf = (buf :+ x2).takeRight(window)
-            }
-            gs.update(ZWindow(buf, lastTs))
-            if (lastTs != Long.MinValue)
-              idleHorizonMicros.foreach(h => armIdleTimeout(gs, lastTs, h))
-            out.result().iterator
+    perKey[String, TouchEvent, ZWindow, ZFlag](input, _.key, Encoders.STRING,
+        idleHorizonMicros, delay) { (key, rows, prev) =>
+      val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.eventId))
+      var buf = prev.fold(Vector.empty[Long])(_.values.toVector)
+      var lastTs = prev.fold(Long.MinValue)(_.lastTs)
+      val out = Seq.newBuilder[ZFlag]
+      val cut = math.round(threshold * threshold * 1e6)
+      sorted.foreach { r =>
+        lastTs = math.max(lastTs, r.tsMicros)
+        val x2 = math.round(r.value * 100)
+        val n = buf.length.toLong
+        if (n >= minN) {
+          // Exact-integer kernel with LOUD overflow: the batch
+          // query escapes int64 through DECIMAL(38,0); this
+          // generic operator instead fails with ArithmeticException
+          // the moment deviation·window leaves the int64 domain
+          // (|x·n − Σx| ≳ 2.1e6 cents) rather than silently
+          // wrapping into wrong/dropped flags.
+          import java.lang.Math.{addExact, multiplyExact, subtractExact}
+          var s1 = 0L; var s2 = 0L
+          buf.foreach { v =>
+            s1 = addExact(s1, v); s2 = addExact(s2, multiplyExact(v, v)) }
+          val varnum =
+            subtractExact(multiplyExact(n, s2), multiplyExact(s1, s1))
+          if (varnum > 0) {
+            val nn = subtractExact(multiplyExact(x2, n), s1)
+            val z2e6 = addExact(
+              multiplyExact(2000000L, multiplyExact(nn, nn)),
+              varnum) / (2 * varnum)
+            if (z2e6 > cut)
+              out += ZFlag(key, r.eventId, roundHalfUp(r.value, 4),
+                java.lang.Long.signum(nn), z2e6)
           }
-        })
+        }
+        buf = (buf :+ x2).takeRight(window)
+      }
+      (out.result().iterator, Some(ZWindow(buf, lastTs)), lastTs)
+    }
   }
 
   final case class ShardedItem(shard: Int, item: String, tsMicros: Long)
@@ -882,52 +781,35 @@ object StatefulOps {
     implicit val outEnc = Encoders.product[HeavyHitter]
     implicit val stEnc = Encoders.product[SsState]
     implicit val evEnc = Encoders.product[ShardedItem]
-    val (src, timeoutConf) = idleHorizonMicros match {
-      case Some(h) =>
-        require(h > 0, s"idleHorizonMicros=$h must be positive")
-        (withEventTimeWatermark(input, delay), GroupStateTimeout.EventTimeTimeout)
-      case None => (input, GroupStateTimeout.NoTimeout)
+    perKey[Int, ShardedItem, SsState, HeavyHitter](input, _.shard, Encoders.scalaInt,
+        idleHorizonMicros, delay) { (shard, rows, prev) =>
+      val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.item))
+      val m = scala.collection.mutable.Map.empty[String, (Long, Long)]
+      var lastTs = Long.MinValue
+      prev.foreach { st =>
+        st.items.foreach { case (i, c, e) => m(i) = (c, e) }
+        lastTs = st.lastTs
+      }
+      sorted.foreach { r =>
+        lastTs = math.max(lastTs, r.tsMicros)
+        m.get(r.item) match {
+          case Some((c, e)) => m(r.item) = (c + 1, e)
+          case None if m.size < capacity => m(r.item) = (1L, 0L)
+          case None =>
+            val (minItem, (mc, _)) =
+              m.minBy { case (i, (c, _)) => (c, i) }
+            m -= minItem
+            m(r.item) = (mc + 1, mc)
+        }
+      }
+      if (sorted.isEmpty) (Iterator.empty, None, Long.MinValue)
+      else (m.toSeq
+          .sortBy { case (i, (c, _)) => (-c, i) }
+          .take(topJ)
+          .map { case (i, (c, e)) => HeavyHitter(shard, i, c, e, lastTs) }
+          .iterator,
+        Some(SsState(m.toSeq.map { case (i, (c, e)) => (i, c, e) }, lastTs)), lastTs)
     }
-    src
-      .groupByKey(_.shard)(Encoders.scalaInt)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (shard: Int, rows: Iterator[ShardedItem], gs: GroupState[SsState]) => {
-          if (gs.hasTimedOut) {
-            gs.remove() // snapshots already emitted each batch
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.tsMicros, r.item))
-            val m = scala.collection.mutable.Map.empty[String, (Long, Long)]
-            var lastTs = Long.MinValue
-            if (gs.exists) {
-              gs.get.items.foreach { case (i, c, e) => m(i) = (c, e) }
-              lastTs = gs.get.lastTs
-            }
-            sorted.foreach { r =>
-              lastTs = math.max(lastTs, r.tsMicros)
-              m.get(r.item) match {
-                case Some((c, e)) => m(r.item) = (c + 1, e)
-                case None if m.size < capacity => m(r.item) = (1L, 0L)
-                case None =>
-                  val (minItem, (mc, _)) =
-                    m.minBy { case (i, (c, _)) => (c, i) }
-                  m -= minItem
-                  m(r.item) = (mc + 1, mc)
-              }
-            }
-            if (sorted.isEmpty) Iterator.empty
-            else {
-              gs.update(SsState(
-                m.toSeq.map { case (i, (c, e)) => (i, c, e) }, lastTs))
-              idleHorizonMicros.foreach(h => armIdleTimeout(gs, lastTs, h))
-              m.toSeq
-                .sortBy { case (i, (c, _)) => (-c, i) }
-                .take(topJ)
-                .map { case (i, (c, e)) => HeavyHitter(shard, i, c, e, lastTs) }
-                .iterator
-            }
-          }
-        })
   }
 
   def streamIntervalJoin(left: DataFrame, right: DataFrame, keyCol: String,

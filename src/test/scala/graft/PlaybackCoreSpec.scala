@@ -165,6 +165,20 @@ class PlaybackCoreSpec extends AnyFunSuite {
     Seq(a, b, "'c1,c2'", "'c1,c3'").foreach(s => assert(ex.getMessage.contains(s), ex.getMessage))
   }
 
+  test("FileQueue: in Explicit mode a queued file with another field count fails with both files and counts") {
+    val t = new Queue()
+    val cfg = t.cfg.copy(columnMethod = ColumnMethod.Explicit, useColumns = "c1:int,c2:int")
+    val a = t.put("a_vib.csv", 1)
+    val b = t.put("b_vib.csv", 2, header = "x,y")
+    val c = t.put("c_vib.csv", 1, header = "c1,c2,c3")
+    val q = new FileQueue(cfg, t.index)
+    q.poll(PlaybackOffset(0L))
+    q.poll(q.grant(0L, 10L))
+    assert(q.offset(1L).file.contains(b) && q.rows == 2L, "same field count, other names: no drift")
+    val ex = intercept[IllegalArgumentException](q.poll(q.grant(1L, 10L)))
+    Seq(a, c, "3 fields", "2 fields").foreach(s => assert(ex.getMessage.contains(s), ex.getMessage))
+  }
+
   test("FileQueue.first is the alphabetically first match") {
     val t = new Queue()
     assert(FileQueue.first(t.dir.toString, "vib").isEmpty)

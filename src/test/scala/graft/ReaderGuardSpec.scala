@@ -17,7 +17,8 @@ import scala.jdk.CollectionConverters._
   * around its own starts. The DSv2 stream class reads no clock and no
   * file system itself: pacing is the `Pacer`'s and the file queue the
   * `FileQueue`'s, whose finder is the one pick of the file that plays.
-  * Pure file scan, no SparkSession needed. */
+  * The keyed-state operators of `StatefulOps` share one idle-eviction
+  * loop, `perKey`. Pure file scan, no SparkSession needed. */
 class ReaderGuardSpec extends AnyFunSuite {
 
   private def sources(dirs: String*): Seq[(java.nio.file.Path, String)] =
@@ -100,6 +101,20 @@ class ReaderGuardSpec extends AnyFunSuite {
     val hits = Seq("System.nanoTime", "java.nio.file.Files").filter(body.contains)
     assert(hits.isEmpty, s"the adapter reads $hits itself")
     assert(!code(text).contains("import java.nio"), "java.nio imported into the stream file")
+  }
+
+  test("StatefulOps names the keyed-state protocol only inside perKey, once each") {
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/StatefulOps.scala"))
+    val start = text.indexOf("def perKey[")
+    assert(start >= 0, "StatefulOps.perKey is gone")
+    val end = text.indexOf("\n\n", start)
+    val (body, rest) = (text.substring(start, end), text.take(start) + text.drop(end))
+    val protocol = Seq("flatMapGroupsWithState", "hasTimedOut",
+      "GroupStateTimeout.EventTimeTimeout", "withEventTimeWatermark(", "armIdleTimeout(")
+    assert(protocol.forall(n => calls(body, n) == 1), s"perKey must name each once: $body")
+    val outside = protocol.filter(n => calls(rest, n) > 0)
+    assert(outside.isEmpty, s"a second keyed-state loop names $outside")
   }
 
   test("PlaybackConfig.matchingFiles has exactly one caller in src/main") {
